@@ -15,28 +15,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Dimension tables small enough to broadcast at any realistic scale
-    * (region/nation are bounded by geography; supplier/customer/part grow
-    * with SF but stay orders of magnitude below the fact tables).
-    */
-  val broadcastableDims: Set[String] = Set("region", "nation", "supplier")
-
   /** Engine functions ride along with the tables: every query path goes
     * through a table accessor, so vec_dot etc. are always resolvable
     * (sessions built with GraftExtensions get them at construction
-    * instead). Idempotent. */
-  private[graft] def registerFunctions(spark: SparkSession): Unit = {
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.BoundedCollectFunctions.register(spark)
-    graft.functions.TopKByFunctions.register(spark)
-    graft.functions.TextFunctions.register(spark)
-    graft.functions.HeavyHittersFunctions.register(spark)
-    graft.functions.MinhashFunctions.register(spark)
-    graft.functions.GramTriFunctions.register(spark)
-    graft.functions.ByteFunctions.register(spark)
-    graft.functions.DibFunctions.register(spark)
-    graft.functions.PcmFunctions.register(spark)
-  }
+    * instead). Both paths read the one list, `GraftExtensions.functions`.
+    * Idempotent. */
+  private[graft] def registerFunctions(spark: SparkSession): Unit =
+    graft.functions.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 
   /** Staged-artifact tag for SF dir `d`: the sanitized path plus a
     * 12-hex content fingerprint (MD5 over the sorted recursive file

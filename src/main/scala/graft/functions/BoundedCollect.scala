@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -10,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** `bounded_collect(value, k)` — `collect_list` with a hard per-group
   * element cap, the missing primitive under every doc-frequency-capped
@@ -120,14 +119,9 @@ object BoundedCollectFunctions {
       s"bounded_collect takes 2 arguments, got ${other.length}")
   }
 
-  /** Install bounded_collect into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("bounded_collect"), info, builder)
-
   /** Collect at most `cap` elements per group (complete iff the group
     * has <= cap members — pass the detection cap + 1 and treat full
-    * results as overflow). Requires [[register]] on the session. */
+    * results as overflow). Requires [[graft.Tables.registerFunctions]] on the session. */
   def boundedCollect(c: Column, cap: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "bounded_collect", c, org.apache.spark.sql.functions.lit(cap))

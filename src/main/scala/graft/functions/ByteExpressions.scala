@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Native Catalyst expression for single-byte access into a binary
   * column — the byte-level codec hot path.
@@ -76,13 +75,8 @@ object ByteFunctions {
       s"byte_at takes 2 arguments, got ${other.length}")
   }
 
-  /** Install byte_at into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("byte_at"), info, builder): Unit
-
   /** Codegen'd single-byte read (1-based, NULL out of range).
-    * Requires [[register]] on the session (Tables.load does it). */
+    * Requires [[graft.Tables.registerFunctions]] on the session (Tables.load does it). */
   def byteAt(bin: Column, pos: Column): Column =
     org.apache.spark.sql.functions.call_function("byte_at", bin, pos)
 }

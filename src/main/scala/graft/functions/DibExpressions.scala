@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, QuaternaryExpression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused codegen folds for the DIB (uncompressed BMP-layout) frame
   * decodes — the per-pixel hot path of the AVI family.
@@ -201,13 +200,6 @@ object DibFunctions {
     case Seq(a, b, c, d) => DibAHash(a, b, c, d)
     case other => throw new IllegalArgumentException(
       s"dib_ahash takes 4 arguments, got ${other.length}")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dib_row_sums"), rowSumsInfo, rowSumsBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("dib_ahash"), aHashInfo, aHashBuilder): Unit
   }
 
   def dibRowSums(bin: Column, rowOff: Column, width: Column): Column =

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -8,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** `gram_tri(vec, scale)` — the exact fixed-point upper-triangle gram
   * digest of an `array<double>` column: one flat `array<bigint>` of
@@ -177,13 +176,8 @@ object GramTriFunctions {
       s"gram_tri takes 2 arguments, got ${other.length}")
   }
 
-  /** Install gram_tri into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("gram_tri"), info, builder)
-
   /** Fixed-point upper-triangle gram digest of an array<double> column.
-    * Requires [[register]] on the session (Tables.load does it). */
+    * Requires [[graft.Tables.registerFunctions]] on the session (Tables.load does it). */
   def gramTri(v: Column, scale: Double): Column =
     org.apache.spark.sql.functions.call_function(
       "gram_tri", v, org.apache.spark.sql.functions.lit(scale))

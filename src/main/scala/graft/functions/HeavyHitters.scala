@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -10,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Ge
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** `heavy_hitters(value, k)` — a Misra–Gries frequency summary with k
   * counters per group, returned as an array of `(item, est)` structs
@@ -176,13 +175,8 @@ object HeavyHittersFunctions {
       s"heavy_hitters takes 2 arguments, got ${other.length}")
   }
 
-  /** Install heavy_hitters into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("heavy_hitters"), info, builder)
-
   /** Misra–Gries summary of `c` with `k` counters. Requires
-    * [[register]] on the session. */
+    * [[graft.Tables.registerFunctions]] on the session. */
   def heavyHitters(c: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "heavy_hitters", c, org.apache.spark.sql.functions.lit(k))

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused 16-permutation MinHash signature over a token array, as a
@@ -130,11 +129,6 @@ object MinhashFunctions {
     case other => throw new IllegalArgumentException(
       s"minhash_sig takes 1 argument, got ${other.length}")
   }
-
-  /** Install minhash_sig into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("minhash_sig"), info, builder)
 
   /** Codegen'd fused MinHash signature of a token-array column. */
   def minhashSig(tokens: Column): Column =

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** Fused codegen folds for the audio-window feature passes — the
   * per-sample hot path of the WAV/PCM family.
@@ -246,18 +245,6 @@ object PcmFunctions {
   }
 
   /** Install the PCM window folds into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pcm16_window"), pcm16Info,
-      builder3("pcm16_window", Pcm16Window.apply))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("ulaw_window"), ulawInfo,
-      builder3("ulaw_window", UlawWindow.apply))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("pcm16_dec2_window"), dec2Info,
-      builder3("pcm16_dec2_window", Pcm16Dec2Window.apply)): Unit
-  }
-
   def pcm16Window(bin: Column, pos: Column, n: Column): Column =
     org.apache.spark.sql.functions.call_function("pcm16_window", bin, pos, n)
 

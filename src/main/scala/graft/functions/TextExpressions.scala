@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode NFC normalization as a native codegen expression.
@@ -62,11 +61,6 @@ object TextFunctions {
     case other => throw new IllegalArgumentException(
       s"nfc_normalize takes 1 argument, got ${other.length}")
   }
-
-  /** Install nfc_normalize into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("nfc_normalize"), info, builder)
 
   /** Codegen'd Unicode NFC normalization of a string column. */
   def nfcNormalize(c: Column): Column =

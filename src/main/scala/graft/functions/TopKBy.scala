@@ -2,7 +2,6 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -10,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 
 /** `top_k_by(value, k)` — the k LARGEST elements per group under the
   * value type's natural ordering, returned as a descending-sorted array.
@@ -125,13 +124,8 @@ object TopKByFunctions {
       s"top_k_by takes 2 arguments, got ${other.length}")
   }
 
-  /** Install top_k_by into the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("top_k_by"), info, builder)
-
   /** The k largest `c` values per group, descending. Requires
-    * [[register]] on the session. */
+    * [[graft.Tables.registerFunctions]] on the session. */
   def topKBy(c: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "top_k_by", c, org.apache.spark.sql.functions.lit(k))

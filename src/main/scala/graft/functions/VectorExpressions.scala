@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 
 /** Native Catalyst expression for the vector hot path.
   *
@@ -274,7 +274,7 @@ case class MatDot(left: Expression, right: Expression)
 }
 
 /** Column-API and SQL surface for the vector expressions. Uses only the
-  * public `call_function` bridge: [[register]] installs the expression
+  * public `call_function` bridge: [[graft.Tables.registerFunctions]] installs the expression
   * builder in the session's function registry (idempotent), and the
   * Column helpers resolve through it at analysis time.
   */
@@ -306,17 +306,8 @@ object VectorFunctions {
 
   /** Install vec_dot/vec_cosine/vec_matdot into the session registry
     * (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("vec_dot"), info, builder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("vec_cosine"), cosineInfo, cosineBuilder)
-    spark.sessionState.functionRegistry
-      .registerFunction(FunctionIdentifier("vec_matdot"), matDotInfo, matDotBuilder)
-  }
-
   /** Codegen'd sequential dot product of two array<double> columns.
-    * Requires [[register]] on the session (Tables.load does it). */
+    * Requires [[graft.Tables.registerFunctions]] on the session (Tables.load does it). */
   def vecDot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 
@@ -336,8 +327,8 @@ object VectorFunctions {
     org.apache.spark.sql.functions.call_function("vec_matdot", v, m)
 }
 
-/** `SparkSessionExtensions` hook: makes `vec_dot` callable from SQL
-  * (`SELECT vec_dot(a, b)`) when the session is built with
+/** `SparkSessionExtensions` hook: makes the engine functions callable
+  * from SQL (`SELECT vec_dot(a, b)`) when the session is built with
   * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   */
@@ -350,41 +341,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // vectorize naive non-equi band joins (nested-loop → bucketed
     // equi-join) — see graft.plans.BandJoinRewrite
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"), VectorFunctions.info, VectorFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_cosine"),
-      VectorFunctions.cosineInfo, VectorFunctions.cosineBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("vec_matdot"),
-      VectorFunctions.matDotInfo, VectorFunctions.matDotBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bounded_collect"),
-      BoundedCollectFunctions.info, BoundedCollectFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_by"), TopKByFunctions.info, TopKByFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"), TextFunctions.info, TextFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"), MinhashFunctions.info, MinhashFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("gram_tri"), GramTriFunctions.info, GramTriFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("byte_at"), ByteFunctions.info, ByteFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("dib_row_sums"),
-      DibFunctions.rowSumsInfo, DibFunctions.rowSumsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("dib_ahash"),
-      DibFunctions.aHashInfo, DibFunctions.aHashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("pcm16_window"),
-      PcmFunctions.pcm16Info, PcmFunctions.builder3("pcm16_window", Pcm16Window.apply)))
-    ext.injectFunction((
-      FunctionIdentifier("ulaw_window"),
-      PcmFunctions.ulawInfo, PcmFunctions.builder3("ulaw_window", UlawWindow.apply)))
-    ext.injectFunction((
-      FunctionIdentifier("pcm16_dec2_window"),
-      PcmFunctions.dec2Info, PcmFunctions.builder3("pcm16_dec2_window", Pcm16Dec2Window.apply)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+object GraftExtensions {
+  /** Every engine SQL function — the one list read both by the
+    * extension above (sessions built with it) and by
+    * [[graft.Tables.registerFunctions]] (any other session). */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("vec_dot"), VectorFunctions.info, VectorFunctions.builder),
+    (FunctionIdentifier("vec_cosine"), VectorFunctions.cosineInfo, VectorFunctions.cosineBuilder),
+    (FunctionIdentifier("vec_matdot"), VectorFunctions.matDotInfo, VectorFunctions.matDotBuilder),
+    (FunctionIdentifier("bounded_collect"), BoundedCollectFunctions.info,
+      BoundedCollectFunctions.builder),
+    (FunctionIdentifier("top_k_by"), TopKByFunctions.info, TopKByFunctions.builder),
+    (FunctionIdentifier("nfc_normalize"), TextFunctions.info, TextFunctions.builder),
+    (FunctionIdentifier("heavy_hitters"), HeavyHittersFunctions.info,
+      HeavyHittersFunctions.builder),
+    (FunctionIdentifier("minhash_sig"), MinhashFunctions.info, MinhashFunctions.builder),
+    (FunctionIdentifier("gram_tri"), GramTriFunctions.info, GramTriFunctions.builder),
+    (FunctionIdentifier("byte_at"), ByteFunctions.info, ByteFunctions.builder),
+    (FunctionIdentifier("dib_row_sums"), DibFunctions.rowSumsInfo, DibFunctions.rowSumsBuilder),
+    (FunctionIdentifier("dib_ahash"), DibFunctions.aHashInfo, DibFunctions.aHashBuilder),
+    (FunctionIdentifier("pcm16_window"), PcmFunctions.pcm16Info,
+      PcmFunctions.builder3("pcm16_window", Pcm16Window.apply)),
+    (FunctionIdentifier("ulaw_window"), PcmFunctions.ulawInfo,
+      PcmFunctions.builder3("ulaw_window", UlawWindow.apply)),
+    (FunctionIdentifier("pcm16_dec2_window"), PcmFunctions.dec2Info,
+      PcmFunctions.builder3("pcm16_dec2_window", Pcm16Dec2Window.apply)))
 }

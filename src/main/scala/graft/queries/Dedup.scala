@@ -1591,7 +1591,7 @@ object Dedup {
   private[graft] def connectedComponents(edges: DataFrame): (DataFrame, Int) = {
     // seed with the first propagation round fused in: label(0) =
     // min(id, neighbors) — one round fewer to converge
-    var labels = edges.select(col("src").as("id"), col("dst").as("label"))
+    val labels0 = edges.select(col("src").as("id"), col("dst").as("label"))
       .unionByName(edges.select(col("src").as("id"), col("src").as("label")))
       .groupBy("id").agg(min(col("label")).as("label"))
       .localCheckpoint()
@@ -1604,21 +1604,19 @@ object Dedup {
       l.join(tgt, l("label") === tgt("jid"), "left")
         .select(l("id"), coalesce(col("jlabel"), l("label")).as("label"))
     }
-    var prev: java.math.BigDecimal = null
-    var curr = checksum(labels)
-    var rounds = 0
-    while (prev == null || curr.compareTo(prev) != 0) {
-      rounds += 1
-      require(rounds <= 64, "label propagation failed to converge in 64 rounds")
-      val neigh = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("label"))
-      val propagated = labels.unionByName(neigh)
-        .groupBy("id").agg(min(col("label")).as("label"))
-      labels = jump(propagated).localCheckpoint()
-      prev = curr
-      curr = checksum(labels)
+    // state: (labels, the previous round's checksum, their checksum)
+    val prop = Iterate.fixpoint((labels0, Option.empty[java.math.BigDecimal], checksum(labels0)), 64)(
+      { case (_, prev, curr) => prev.exists(_.compareTo(curr) == 0) }) {
+      case ((labels, _, curr), _) =>
+        val neigh = edges.join(labels, edges("dst") === labels("id"))
+          .select(edges("src").as("id"), col("label"))
+        val propagated = labels.unionByName(neigh)
+          .groupBy("id").agg(min(col("label")).as("label"))
+        val next = jump(propagated).localCheckpoint()
+        (next, Some(curr), checksum(next))
     }
-    (labels, rounds)
+    require(prop.converged, "label propagation failed to converge in 64 rounds")
+    (prop.state._1, prop.rounds)
   }
 
   def clusterKeeper(s: SparkSession, d: String): DataFrame = {

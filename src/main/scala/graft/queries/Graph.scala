@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -101,74 +101,12 @@ object Graph {
   // exactly one exchange (the dst-grain aggregation) at every SF below
   // the cap, and the registry's cap_graph_broadcast_nodes row names
   // the switchover.
-  def pageRank(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d).localCheckpoint()
-    // out-degree at src grain; every node appears as a src by
-    // construction (edges run both ways), so outdeg is the node list
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val n = outdeg.count()
-    val bc = n <= BroadcastNodeStateMax
-    val base = Teleport / n.toDouble
-    var ranks = outdeg.select(col("src").as("node"),
-      (lit(1.0) / n.toDouble).as("rank"))
-    for (_ <- 1 to Rounds) {
-      val contrib = e
-        .join(stateSide(outdeg, bc), "src")
-        .join(stateSide(ranks, bc), e("src") === ranks("node"))
-        .select(col("dst"),
-          round(col("rank") / col("outdeg").cast("double") * Fixed)
-            .cast("long").cast("decimal(38,0)").as("c_fixed"))
-        .groupBy("dst")
-        .agg(sum(col("c_fixed")).as("in_fixed"))
-      // keep-all-nodes: a node with no in-edges this round still holds
-      // the teleport mass
-      ranks = ranks.select(col("node"))
-        .join(stateSide(contrib, bc), col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(base) + lit(Damping) *
-            (coalesce(col("in_fixed"), lit(0).cast("decimal(38,0)"))
-              .cast("double") / Fixed)).as("rank"))
-        .localCheckpoint()
-    }
-    ranks.select(col("node").cast("long").as("node"), col("rank"))
-      .orderBy("node")
-  }
+  def pageRank(s: SparkSession, d: String): DataFrame =
+    rankWalk(s, d)((_, n) => (lit(1.0) / n.toDouble, lit(Teleport / n.toDouble)))
 
-  val pageRankSql: String = {
-    val iterCtes = (1 to Rounds).map { i =>
-      val prev = s"r${i - 1}"
-      s"""con$i AS MATERIALIZED (
-         |  SELECT e.dst,
-         |    SUM(CAST(CAST(round(r.rank / CAST(o.outdeg AS DOUBLE) * 1e12) AS BIGINT)
-         |      AS DECIMAL(38,0))) AS in_fixed
-         |  FROM e JOIN o ON e.src = o.src
-         |  JOIN $prev r ON e.src = r.node
-         |  GROUP BY e.dst),
-         |r$i AS MATERIALIZED (
-         |  SELECT p.node,
-         |    (SELECT 0.15 / CAST(count(*) AS DOUBLE) FROM o)
-         |      + 0.85 * (CAST(COALESCE(c.in_fixed, 0) AS DOUBLE) / 1e12) AS rank
-         |  FROM $prev p LEFT JOIN con$i c ON p.node = c.dst)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pairs AS MATERIALIZED (
-       |  SELECT DISTINCT l_suppkey * 2 AS s_node, o_custkey * 2 + 1 AS c_node
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |e AS MATERIALIZED (
-       |  SELECT s_node AS src, c_node AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT c_node AS src, s_node AS dst FROM pairs),
-       |o AS MATERIALIZED (
-       |  SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-       |r0 AS MATERIALIZED (
-       |  SELECT src AS node,
-       |    1.0 / (SELECT CAST(count(*) AS DOUBLE) FROM o) AS rank
-       |  FROM o),
-       |$iterCtes
-       |SELECT CAST(node AS BIGINT) AS node, rank
-       |FROM r$Rounds
-       |ORDER BY node""".stripMargin
-  }
+  val pageRankSql: String = rankWalkSql(
+    init = "1.0 / (SELECT CAST(count(*) AS DOUBLE) FROM o)",
+    teleport = "(SELECT 0.15 / CAST(count(*) AS DOUBLE) FROM o)")
 
   // --- q_gr_ppr: personalized PageRank — the retrieval-serving variant ----
   // Global PageRank answers "what matters overall"; serving wants "what
@@ -187,62 +125,87 @@ object Graph {
   // are pinned in GraphSpec.
   private val PprSeedMod = 5L
   private val pprSeedExpr = s"node % 2 = 0 AND (node DIV 2) % $PprSeedMod = 0"
+  private def pprSeedSql(c: String) = s"$c % 2 = 0 AND ($c // 2) % $PprSeedMod = 0"
 
-  def personalizedPageRank(s: SparkSession, d: String): DataFrame = {
-    val e = edges(s, d).localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val nodes = outdeg.select(col("src").as("node"))
-    // node-grain state rides the BroadcastNodeStateMax switch — see
-    // pageRank: statically hinted rounds are plan-deterministic (one
-    // dst-grain exchange each) where AQE's runtime demotion raced the
-    // state-side exchange submission and flipped the fingerprint
-    val bc = outdeg.count() <= BroadcastNodeStateMax
+  def personalizedPageRank(s: SparkSession, d: String): DataFrame =
+    rankWalk(s, d)(pprMass)
+
+  /** PPR's initial-rank and teleport columns: both put all their mass on
+    * the seed set, split evenly over its members. */
+  private def pprMass(nodes: DataFrame, n: Long): (Column, Column) = {
     val seedPred = expr(pprSeedExpr)
     val sCount = nodes.filter(seedPred).count()
     require(sCount > 0, "PPR needs a non-empty seed set")
-    val base = Teleport / sCount.toDouble
-    var ranks = nodes.select(col("node"),
-      when(seedPred, lit(1.0) / sCount.toDouble).otherwise(lit(0.0))
-        .as("rank"))
-    for (_ <- 1 to Rounds) {
-      val contrib = e
-        .join(stateSide(outdeg, bc), "src")
-        .join(stateSide(ranks, bc), e("src") === ranks("node"))
-        .select(col("dst"),
-          round(col("rank") / col("outdeg").cast("double") * Fixed)
-            .cast("long").cast("decimal(38,0)").as("c_fixed"))
-        .groupBy("dst")
-        .agg(sum(col("c_fixed")).as("in_fixed"))
-      ranks = ranks.select(col("node"))
-        .join(stateSide(contrib, bc), col("node") === col("dst"), "left")
-        .select(col("node"),
-          (when(seedPred, lit(base)).otherwise(lit(0.0)) + lit(Damping) *
-            (coalesce(col("in_fixed"), lit(0).cast("decimal(38,0)"))
-              .cast("double") / Fixed)).as("rank"))
-        .localCheckpoint()
+    (when(seedPred, lit(1.0) / sCount.toDouble).otherwise(lit(0.0)),
+      when(seedPred, lit(Teleport / sCount.toDouble)).otherwise(lit(0.0)))
+  }
+
+  val personalizedPageRankSql: String = rankWalkSql(
+    init = s"CASE WHEN ${pprSeedSql("src")} THEN 1.0 / (SELECT c FROM sc) ELSE 0.0 END",
+    teleport = s"CASE WHEN ${pprSeedSql("p.node")} THEN 0.15 / (SELECT c FROM sc) ELSE 0.0 END",
+    seedCtes = s"""
+       |sc AS MATERIALIZED (
+       |  SELECT CAST(count(*) AS DOUBLE) AS c FROM o
+       |  WHERE ${pprSeedSql("src")}),""".stripMargin)
+
+  /** The damped power iteration shared by PageRank and PPR. `mass` maps
+    * the node list (column `node`) and its size to the initial-rank and
+    * teleport columns; the edge table, the per-round join + dst-grain
+    * fixed-point sum, the broadcast switch and the per-round checkpoint
+    * are common. */
+  private def rankWalk(s: SparkSession, d: String)(
+      mass: (DataFrame, Long) => (Column, Column)): DataFrame = {
+    val e = edges(s, d).localCheckpoint()
+    // out-degree at src grain; every node appears as a src by
+    // construction (edges run both ways), so outdeg is the node list
+    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint()
+    val nodes = outdeg.select(col("src").as("node"))
+    val n = outdeg.count()
+    val bc = n <= BroadcastNodeStateMax
+    val (init, teleport) = mass(nodes, n)
+    val ranks = (1 to Rounds).foldLeft(nodes.select(col("node"), init.as("rank"))) {
+      (ranks, _) =>
+        val contrib = e
+          .join(stateSide(outdeg, bc), "src")
+          .join(stateSide(ranks, bc), e("src") === ranks("node"))
+          .select(col("dst"),
+            round(col("rank") / col("outdeg").cast("double") * Fixed)
+              .cast("long").cast("decimal(38,0)").as("c_fixed"))
+          .groupBy("dst")
+          .agg(sum(col("c_fixed")).as("in_fixed"))
+        // keep-all-nodes: a node with no in-edges this round still holds
+        // the teleport mass
+        ranks.select(col("node"))
+          .join(stateSide(contrib, bc), col("node") === col("dst"), "left")
+          .select(col("node"),
+            (teleport + lit(Damping) *
+              (coalesce(col("in_fixed"), lit(0).cast("decimal(38,0)"))
+                .cast("double") / Fixed)).as("rank"))
+          .localCheckpoint()
     }
     ranks.select(col("node").cast("long").as("node"), col("rank"))
       .orderBy("node")
   }
 
-  val personalizedPageRankSql: String = {
-    val seed = s"node % 2 = 0 AND (node // 2) % $PprSeedMod = 0"
+  /** The DuckDB twin of [[rankWalk]]: every round as MATERIALIZED CTEs.
+    * `init` is the initial rank over `o.src`, `teleport` the per-round
+    * teleport mass over `p.node`, and `seedCtes` any CTEs they read. */
+  private def rankWalkSql(init: String, teleport: String, seedCtes: String = ""): String = {
     val iterCtes = (1 to Rounds).map { i =>
-      val prev = s"p${i - 1}"
-      s"""pcon$i AS MATERIALIZED (
+      val prev = s"r${i - 1}"
+      s"""con$i AS MATERIALIZED (
          |  SELECT e.dst,
          |    SUM(CAST(CAST(round(r.rank / CAST(o.outdeg AS DOUBLE) * 1e12) AS BIGINT)
          |      AS DECIMAL(38,0))) AS in_fixed
          |  FROM e JOIN o ON e.src = o.src
          |  JOIN $prev r ON e.src = r.node
          |  GROUP BY e.dst),
-         |p$i AS MATERIALIZED (
+         |r$i AS MATERIALIZED (
          |  SELECT p.node,
-         |    CASE WHEN p.node % 2 = 0 AND (p.node // 2) % $PprSeedMod = 0
-         |         THEN 0.15 / (SELECT c FROM sc) ELSE 0.0 END
+         |    $teleport
          |      + 0.85 * (CAST(COALESCE(c.in_fixed, 0) AS DOUBLE) / 1e12) AS rank
-         |  FROM $prev p LEFT JOIN pcon$i c ON p.node = c.dst)""".stripMargin
+         |  FROM $prev p LEFT JOIN con$i c ON p.node = c.dst)""".stripMargin
     }.mkString(",\n")
     s"""WITH pairs AS MATERIALIZED (
        |  SELECT DISTINCT l_suppkey * 2 AS s_node, o_custkey * 2 + 1 AS c_node
@@ -252,18 +215,13 @@ object Graph {
        |  UNION ALL
        |  SELECT c_node AS src, s_node AS dst FROM pairs),
        |o AS MATERIALIZED (
-       |  SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-       |sc AS MATERIALIZED (
-       |  SELECT CAST(count(*) AS DOUBLE) AS c FROM o
-       |  WHERE src % 2 = 0 AND (src // 2) % $PprSeedMod = 0),
-       |p0 AS MATERIALIZED (
-       |  SELECT src AS node,
-       |    CASE WHEN src % 2 = 0 AND (src // 2) % $PprSeedMod = 0
-       |         THEN 1.0 / (SELECT c FROM sc) ELSE 0.0 END AS rank
+       |  SELECT src, count(*) AS outdeg FROM e GROUP BY src),$seedCtes
+       |r0 AS MATERIALIZED (
+       |  SELECT src AS node, $init AS rank
        |  FROM o),
        |$iterCtes
        |SELECT CAST(node AS BIGINT) AS node, rank
-       |FROM p$Rounds
+       |FROM r$Rounds
        |ORDER BY node""".stripMargin
   }
 
@@ -519,6 +477,26 @@ object Graph {
       .join(stateSide(visited, bc), Seq("node"), "left_anti")
       .select(col("node"), lit(k.toLong).as("dist"))
 
+  /** The frontier/visited walk shared by BFS, multi-source BFS and SCC:
+    * each round `expand(frontier, visited, k)` yields the newly reached
+    * rows (already anti-joined against `visited`), which become the
+    * next frontier and are appended to `visited`. Only the new frontier
+    * is ever joined against the adjacency; the visited rows are never
+    * re-grouped (the first BFS cut re-aggregated the full dist set
+    * every round: 6 full passes, 10.5 s at sf0.1 for a 2-hop graph).
+    * The walk stops when the frontier is empty — one checkpointed
+    * `limit(1).count()` per round, the standard convergence probe — or
+    * after `maxRounds` expansions. State is (visited, frontier). */
+  private def frontierWalk(seed: DataFrame, maxRounds: Int)(
+      expand: (DataFrame, DataFrame, Int) => DataFrame): Iterate.Fixpoint[(DataFrame, DataFrame)] = {
+    val start = seed.localCheckpoint()
+    Iterate.fixpoint((start, start), maxRounds)(_._2.limit(1).count() == 0) {
+      case ((visited, frontier), k) =>
+        val next = expand(frontier, visited, k).localCheckpoint()
+        (visited.unionAll(next).localCheckpoint(), next)
+    }
+  }
+
   private[graft] def bfsOf(und: DataFrame, maxBroadcastNodes: Long): DataFrame = {
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
@@ -529,29 +507,12 @@ object Graph {
     val bc = nodes.count() <= maxBroadcastNodes
     val srcDf = und.agg(min(col("a")).as("node"))
       .select(col("node"), lit(0L).as("dist"))
-    // frontier/visited split: each round joins ONLY the new frontier
-    // against the adjacency and anti-joins the visited set — the
-    // visited rows are never re-grouped (the first cut re-aggregated
-    // the full dist set every round: 6 full passes, 10.5 s at sf0.1
-    // for a 2-hop graph; this shape converges in diameter rounds).
-    // The empty-frontier early exit reads one checkpointed count per
-    // round — the standard iterative-driver convergence probe, same
-    // cost class as Lloyd's/pagerank round actions.
-    var visited = srcDf.localCheckpoint()
-    var frontier = visited
-    var k = 1
-    while (k <= MaxHops && frontier.limit(1).count() > 0) {
-      // frontier and visited are node-grain — BROADCAST both (below the
-      // threshold), so the probe join and the anti-join leave the edge
-      // list in place and a round's only exchange is the frontier
-      // distinct (the connected/labelprop discipline; the r12 shape let
-      // the planner exchange the adjacency side of both joins every round)
-      val next = bfsRound(adj, frontier, visited, k, bc).localCheckpoint()
-      visited = visited.unionAll(next).localCheckpoint()
-      frontier = next
-      k += 1
-    }
-    val dist = visited
+    // frontier and visited are node-grain — BROADCAST both (below the
+    // threshold), so the probe join and the anti-join leave the edge
+    // list in place and a round's only exchange is the frontier
+    // distinct (the connected/labelprop discipline; the r12 shape let
+    // the planner exchange the adjacency side of both joins every round)
+    val dist = frontierWalk(srcDf, MaxHops)(bfsRound(adj, _, _, _, bc)).state._1
     val perHop = dist.groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"),
         min(col("node")).as("min_node"), max(col("node")).as("max_node"))
@@ -642,22 +603,13 @@ object Graph {
       .localCheckpoint() // probed by every round
     val srcs = adj.select(col("u").as("src")).distinct()
       .orderBy("src").limit(CloseSources) // TakeOrdered: k-row driver merge
-    var visited = srcs
-      .select(col("src"), col("src").as("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = visited
-    var k = 1
-    while (k <= CloseHops && frontier.limit(1).count() > 0) {
-      val next = frontier.join(adj, col("node") === col("u"))
+    val seed = srcs.select(col("src"), col("src").as("node"), lit(0L).as("dist"))
+    frontierWalk(seed, CloseHops) { (frontier, visited, k) =>
+      frontier.join(adj, col("node") === col("u"))
         .select(col("src"), col("v").as("node")).distinct()
         .join(visited, Seq("src", "node"), "left_anti")
         .select(col("src"), col("node"), lit(k.toLong).as("dist"))
-        .localCheckpoint()
-      visited = visited.unionAll(next).localCheckpoint()
-      frontier = next
-      k += 1
-    }
-    visited
+    }.state._1
   }
 
   /** The same walk as DuckDB CTEs (expects und from coEdgesSql; names
@@ -798,23 +750,16 @@ object Graph {
     val adj = e.select(lit("F").as("dir"), col("f").as("u"), col("t").as("v"))
       .unionAll(e.select(lit("B").as("dir"), col("t").as("u"), col("f").as("v")))
       .localCheckpoint()
-    var visited = pivot
-      .select(explode(array(lit("F"), lit("B"))).as("dir"), col("node"))
-      .localCheckpoint()
-    var frontier = visited
-    var rounds = 0
-    while (rounds < SccMaxRounds && frontier.limit(1).count() > 0) {
-      val next = frontier
+    val seed = pivot.select(explode(array(lit("F"), lit("B"))).as("dir"), col("node"))
+    val walk = frontierWalk(seed, SccMaxRounds) { (frontier, visited, _) =>
+      frontier
         .join(adj, frontier("dir") === adj("dir") && col("node") === col("u"))
         .select(adj("dir").as("dir"), col("v").as("node")).distinct()
         .join(visited, Seq("dir", "node"), "left_anti")
-        .localCheckpoint()
-      visited = visited.unionAll(next).localCheckpoint()
-      frontier = next
-      rounds += 1
     }
-    require(frontier.limit(1).count() == 0,
+    require(walk.converged,
       s"scc: reachability did not converge within $SccMaxRounds rounds - raise the cap")
+    val visited = walk.state._1
     val fwd = visited.filter(col("dir") === "F")
       .select(col("node"), lit(1L).as("in_f"))
     val bwd = visited.filter(col("dir") === "B")
@@ -936,31 +881,29 @@ object Graph {
     val adj = und.select(col("a").as("u"), col("b").as("v"))
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint()
-    var labels = adj.select(col("u").as("node")).distinct()
+    val labels0 = adj.select(col("u").as("node")).distinct()
       .withColumn("lab", col("node")).localCheckpoint()
-    if (labels.count() > maxBroadcastNodes)
+    if (labels0.count() > maxBroadcastNodes)
       return connectedLssOf(und, maxBroadcastNodes)._1
-    var changed = 1L
-    var k = 0
-    while (changed > 0L && k < CcMaxRounds) {
-      // labels and nbmin are node-grain (the part catalogue here, like
-      // labelProp's vector) — both BROADCAST, so a round pays exactly
-      // ONE exchange: the state-side groupBy(v). The r12 shape let the
-      // planner exchange both sides of both joins (the checkpoint's
-      // UnknownPartitioning hides co-location), ~4 stages/round of
-      // pure latency on a ~4 MB shuffle query.
-      val next = ccRound(adj, labels, bc = true).localCheckpoint()
-      changed = next.agg(sum(col("moved"))).first().getLong(0)
-      labels = next.select("node", "lab")
-      k += 1
+    // state: (labels, nodes moved by the last round)
+    val prop = Iterate.fixpoint((labels0, 1L), CcMaxRounds)(_._2 == 0L) {
+      case ((labels, _), _) =>
+        // labels and nbmin are node-grain (the part catalogue here, like
+        // labelProp's vector) — both BROADCAST, so a round pays exactly
+        // ONE exchange: the state-side groupBy(v). The r12 shape let the
+        // planner exchange both sides of both joins (the checkpoint's
+        // UnknownPartitioning hides co-location), ~4 stages/round of
+        // pure latency on a ~4 MB shuffle query.
+        val next = ccRound(adj, labels, bc = true).localCheckpoint()
+        (next.select("node", "lab"), next.agg(sum(col("moved"))).first().getLong(0))
     }
     // The oracle is the UNCAPPED fixpoint: exiting with labels still
     // moving would silently return a wrong partition, so an undersized
     // cap must fail loudly here rather than downstream in a hash diff.
-    require(changed == 0L,
+    require(prop.converged,
       s"connected(): label propagation still moving after $CcMaxRounds " +
         "rounds - raise CcMaxRounds (graph eccentricity exceeds the cap)")
-    labels.groupBy(col("lab").as("component"))
+    prop.state._1.groupBy(col("lab").as("component"))
       .agg(count(lit(1)).as("n_nodes"), max(col("node")).as("max_node"))
       .orderBy("component")
   }
@@ -1058,7 +1001,7 @@ object Graph {
     // 31-bit injectivity guard lives IN packPairKey (loud raise at
     // scan time, no extra scalar job); every pack inside lssRound only
     // recombines halves of these guarded keys.
-    var edges = und
+    val edges0 = und
       .filter(col("a") =!= col("b"))
       .select(Dedup.packPairKey(
         least(col("a"), col("b")), greatest(col("a"), col("b"))).as("pd"))
@@ -1073,24 +1016,21 @@ object Graph {
           lit(0L)).as("h")).first()
       (r.getLong(0), r.getLong(1))
     }
-    var sig = probe(edges)
-    var converged = false
-    var k = 0
-    while (!converged && k < LssMaxRounds) {
-      // Per-node min digests broadcast back onto the edge-grain stream
-      // only under the threshold (lssRound's chooser) — then a round's
-      // exchanges are only the two state-side aggregations and the
-      // dedup distincts, never the edge list itself.
-      val next = lssRound(edges, bc).localCheckpoint()
-      val nsig = probe(next)
-      converged = nsig == sig
-      sig = nsig
-      edges = next
-      k += 1
+    // state: (edges, their signature, whether the last round kept it)
+    val stars = Iterate.fixpoint((edges0, probe(edges0), false), LssMaxRounds)(_._3) {
+      case ((edges, sig, _), _) =>
+        // Per-node min digests broadcast back onto the edge-grain stream
+        // only under the threshold (lssRound's chooser) — then a round's
+        // exchanges are only the two state-side aggregations and the
+        // dedup distincts, never the edge list itself.
+        val next = lssRound(edges, bc).localCheckpoint()
+        val nsig = probe(next)
+        (next, nsig, nsig == sig)
     }
-    require(converged,
+    require(stars.converged,
       s"connectedLss(): star rounds still rewriting after $LssMaxRounds " +
         "rounds - raise LssMaxRounds")
+    val edges = stars.state._1
     // fixpoint edges are (component-min, node) stars; min nodes label
     // themselves
     val labels = nodes
@@ -1100,7 +1040,7 @@ object Graph {
     val out = labels.groupBy(col("lab").as("component"))
       .agg(count(lit(1)).as("n_nodes"), max(col("node")).as("max_node"))
       .orderBy("component")
-    (out, k)
+    (out, stars.rounds)
   }
 
   lazy val connectedSql: String =
@@ -1142,40 +1082,37 @@ object Graph {
   private val CoreMaxRounds = 8
 
   def kcore(s: SparkSession, d: String): DataFrame =
-    kcoreOf(coEdges(s, d))
+    kcoreOf(coEdges(s, d))._1
 
   /** Peeling core over any undirected (a, b) edge frame — split out so
     * specs can drive constructed graphs where peeling actually
     * cascades (the co-purchase graph is dense enough to be a 3-core
-    * already). */
-  private[graft] def kcoreOf(und: DataFrame): DataFrame = {
-    var edges = und.select("a", "b").localCheckpoint()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < CoreMaxRounds) {
-      val deg = edges.select(col("a").as("n"))
-        .unionAll(edges.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("deg"))
-      val low = deg.filter(col("deg") < CoreK).select("n").localCheckpoint()
-      if (low.limit(1).count() == 0) converged = true
-      else {
-        edges = edges
-          .join(low.toDF("a"), Seq("a"), "left_anti")
-          .join(low.toDF("b"), Seq("b"), "left_anti")
-          .select("a", "b").localCheckpoint()
-        rounds += 1
-      }
+    * already). Returns (result, peel rounds) so specs can pin the
+    * rounds within the oracle's fixed peel depth. */
+  private[graft] def kcoreOf(und: DataFrame): (DataFrame, Int) = {
+    // the stop test builds and probes the low-degree set; the round
+    // that follows peels that same checkpoint
+    var low: DataFrame = null
+    val peel = Iterate.fixpoint(und.select("a", "b").localCheckpoint(), CoreMaxRounds) {
+      edges =>
+        low = edges.select(col("a").as("n"))
+          .unionAll(edges.select(col("b").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") < CoreK).select("n").localCheckpoint()
+        low.limit(1).count() == 0
+    } { (edges, _) =>
+      edges
+        .join(low.toDF("a"), Seq("a"), "left_anti")
+        .join(low.toDF("b"), Seq("b"), "left_anti")
+        .select("a", "b").localCheckpoint()
     }
-    lastKcoreRounds = rounds
-    edges.select(col("a").as("node"))
+    val edges = peel.state
+    val out = edges.select(col("a").as("node"))
       .unionAll(edges.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
       .orderBy("node")
+    (out, peel.rounds)
   }
-
-  /** Rounds the Spark side actually needed on the last run — GraphSpec
-    * asserts this stays within the oracle's fixed peel depth. */
-  @volatile private[graft] var lastKcoreRounds: Int = -1
 
   lazy val kcoreSql: String = {
     val peels = (1 to CoreMaxRounds).map { i =>

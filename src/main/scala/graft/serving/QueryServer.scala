@@ -101,7 +101,15 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
   private case class Request(method: String, params: Map[String, Seq[String]],
                              path: String) {
     def first(k: String): Option[String] = params.get(k).flatMap(_.headOption)
+    /** Typed params (FastAPI `Query(int)` / `Query(float)` parity): a
+      * malformed value answers 400, never a 500. */
+    def int(k: String): Option[Int] = typed(k, "an integer")(_.toIntOption)
+    def double(k: String): Option[Double] = typed(k, "a number")(_.toDoubleOption)
+    private def typed[T](k: String, kind: String)(parse: String => Option[T]): Option[T] =
+      first(k).map(v => parse(v).getOrElse(throw BadParam(s"$k must be $kind")))
   }
+  /** A malformed typed param; [[handler]] answers it with a 400. */
+  private case class BadParam(detail: String) extends RuntimeException(detail)
   /** `chunks` set → chunked transfer encoding: the body streams from
     * the iterator (one Spark partition in flight via toLocalIterator),
     * so a 50k-row export never materializes on the edge heap. */
@@ -123,6 +131,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
             .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
           f(Request(x.getRequestMethod, params, x.getRequestURI.getPath))
         } catch {
+          case BadParam(detail) => Response(400, jsonObj("detail" -> jsonStr(detail)))
           case NonFatal(e) =>
             Response(500, jsonObj("detail" -> jsonStr(
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
@@ -161,10 +170,11 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * (`routes.py:57`); when false (the default) the payload column is
     * never even selected, so the parquet scan stays narrow. */
   private def data(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows)
+    val limit = r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows)
     if (limit > 5000 || limit < 0)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [0, 5000]")))
-    val offset = math.max(0, r.first("offset").map(_.toInt).getOrElse(0))
+    val offset = math.max(0, r.int("offset").getOrElse(0))
+    val (minValue, maxValue) = (r.double("min_value"), r.double("max_value"))
     val includeRaw = r.first("include_raw").exists(_.equalsIgnoreCase("true"))
 
     val obs = spark.read.parquet(wh.observations)
@@ -178,8 +188,8 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
         r.first("start").map(lit(_).cast("timestamp"))),
       OptionalFilters.leOpt(col("observation_time"),
         r.first("end").map(lit(_).cast("timestamp"))),
-      OptionalFilters.geOpt(col("value"), r.first("min_value").map(_.toDouble)),
-      OptionalFilters.leOpt(col("value"), r.first("max_value").map(_.toDouble)))
+      OptionalFilters.geOpt(col("value"), minValue),
+      OptionalFilters.leOpt(col("value"), maxValue))
     // raw_payload is selected ONLY when asked for — column pruning keeps
     // the default page's scan off the (wide) payload column entirely
     val rawCol =
@@ -264,7 +274,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   /** `discovery.py:43-57`: newest raw payloads, cap 50. */
   private def sample(r: Request): Response = {
-    val limit = math.min(r.first("limit").map(_.toInt).getOrElse(5), 50)
+    val limit = math.min(r.int("limit").getOrElse(5), 50)
     r.first("dataset_id") match {
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
@@ -452,21 +462,12 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * The predicate is a plan-side filter (get_json_object + try_cast),
     * so only matching payloads reach the bounded edge collect. */
   private def rawPreview(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(20)
+    val limit = r.int("limit").getOrElse(20)
     if (limit < 1 || limit > 500)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [1, 500]")))
     // ALL parameter validation precedes any table access (a malformed
     // site_id must 400 even against an empty warehouse)
-    val siteId = r.first("site_id") match {
-      case Some(sid) =>
-        sid.toIntOption match {
-          case None => // typed Query param parity: 4xx, not a 500
-            return Response(400,
-              jsonObj("detail" -> jsonStr("site_id must be an integer")))
-          case ok => ok
-        }
-      case None => None
-    }
+    val siteId = r.int("site_id")
     r.first("dataset_id") match {
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
@@ -508,7 +509,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * export — the reference's StreamingResponse contract. */
   private def exportCsv(r: Request): Response = {
     val limit = math.min(
-      r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows),
+      r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows),
       graft.sources.Exports.MaxExportRows)
     val obs = spark.read.parquet(wh.observations)
     val filtered = OptionalFilters(obs,
@@ -531,7 +532,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * [1, 50000], payloads ordered ingested_at DESC (event_id tie-break
     * for a stable page — the second-grain stamp alone isn't an order). */
   private def rawPage(r: Request): Either[Response, Array[String]] = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows)
+    val limit = r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows)
     if (limit < 1 || limit > 50000)
       return Left(Response(400,
         jsonObj("detail" -> jsonStr("limit must be in [1, 50000]"))))
@@ -616,7 +617,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * source required, country/variable/date-range optional, page
     * capped at the reference's le=5000, newest first. */
   private def gieData(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(100)
+    val limit = r.int("limit").getOrElse(100)
     if (limit > 5000 || limit < 0)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [0, 5000]")))
     r.first("source") match {

@@ -24,16 +24,6 @@ object Schemas {
     StructField("is_active", BooleanType, nullable = false),
     StructField("lookback_days", IntegerType)))
 
-  /** Fact table — `data_observations` (`models.py:42-62`); logical PK
-    * (series_id, observation_time), enforced by the upsert dedup. */
-  val dataObservations: StructType = StructType(Seq(
-    StructField("series_id", StringType, nullable = false),
-    StructField("observation_time", TimestampType, nullable = false),
-    StructField("value", DoubleType, nullable = false),
-    StructField("quality_flag", StringType),
-    StructField("ingestion_time", TimestampType, nullable = false),
-    StructField("raw_payload", StringType)))
-
   /** Zero-loss landing zone — `raw_events` (`models.py:65-74`). */
   val rawEvents: StructType = StructType(Seq(
     StructField("event_id", StringType, nullable = false),
@@ -58,15 +48,6 @@ object Schemas {
     StructField("asset_type", StringType),
     StructField("level", StringType),
     StructField("quality", StringType)))
-
-  /** GIE series dimension — `meta.series` (`db_queries.sql:159-172`). */
-  val gieSeries: StructType = StructType(Seq(
-    StructField("series_id", LongType, nullable = false),
-    StructField("asset_id", LongType, nullable = false),
-    StructField("variable", StringType, nullable = false),
-    StructField("source", StringType, nullable = false),
-    StructField("unit", StringType),
-    StructField("series_unique_concat", StringType, nullable = false)))
 
   /** GIE daily fact — `energy.daily` (`db_queries.sql:175-181`). */
   val daily: StructType = StructType(Seq(

@@ -249,16 +249,18 @@ class GraphSpec extends SparkSpec {
     val edges = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (3L, 5L), (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L)).toDF("a", "b")
-    val core = Graph.kcoreOf(edges).collect()
+    val (coreDf, rounds) = Graph.kcoreOf(edges)
+    val core = coreDf.collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Long]("deg"))).toMap
     assert(core === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L),
       s"3-core must be exactly the K4: $core")
-    assert(Graph.lastKcoreRounds <= 8, "spec graph must converge within the oracle bound")
-    assert(Graph.lastKcoreRounds === 3, "pendant chain peels one node per round")
+    assert(rounds <= 8, "spec graph must converge within the oracle bound")
+    assert(rounds === 3, "pendant chain peels one node per round")
     // the real corpus converges within the oracle's fixed peel depth
-    Graph.kcore(spark, sf).collect()
-    assert(Graph.lastKcoreRounds >= 0 && Graph.lastKcoreRounds <= 8,
-      s"corpus peeling must fit the oracle's ${8} rounds: ${Graph.lastKcoreRounds}")
+    val (corpusCore, corpusRounds) = Graph.kcoreOf(Graph.coEdges(spark, sf))
+    corpusCore.collect()
+    assert(corpusRounds >= 0 && corpusRounds <= 8,
+      s"corpus peeling must fit the oracle's ${8} rounds: ${corpusRounds}")
     // fixpoint: every surviving node has degree >= 3 by definition
     Graph.kcore(spark, sf).collect().foreach(r =>
       assert(r.getAs[Long]("deg") >= 3L))

@@ -440,6 +440,26 @@ class QueryServerSpec extends SparkSpec {
     }
   }
 
+  test("typed-param parity: a malformed number is a 400 on every route, never a 500") {
+    withServer { (srv, _) =>
+      Seq(
+        "/v2/data?limit=abc" -> "limit must be an integer",
+        "/v2/data?offset=1.5" -> "offset must be an integer",
+        "/v2/data?min_value=low" -> "min_value must be a number",
+        "/v2/data?max_value=high" -> "max_value must be a number",
+        "/v2/discovery/sample?dataset_id=GQ&limit=ten" -> "limit must be an integer",
+        "/v2/discovery/raw?dataset_id=GQ&limit=ten" -> "limit must be an integer",
+        "/v2/export/data.csv?limit=ten" -> "limit must be an integer",
+        "/v2/export/raw/json?dataset_id=GQ&limit=ten" -> "limit must be an integer",
+        "/v2/export/raw/csv?dataset_id=GQ&limit=ten" -> "limit must be an integer",
+        "/v2/gie/data?source=GIE_AGSI&limit=ten" -> "limit must be an integer"
+      ).foreach { case (q, detail) =>
+        val (status, body) = http("GET", s"${srv.url}$q")
+        assert(status === 400 && body.contains(detail), s"$q -> $status $body")
+      }
+    }
+  }
+
   test("raw preview route: newest-first, JSON-path siteId predicate, cap 500") {
     withServer { (srv, wh) =>
       // validation (discovery.py:62-63 Query bounds)

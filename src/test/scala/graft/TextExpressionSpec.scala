@@ -17,7 +17,7 @@ class TextExpressionSpec extends SparkSpec {
 
   test("nfc_normalize composes decomposed sequences to canonical form") {
     import ss.implicits._
-    TextFunctions.register(spark)
+    Tables.registerFunctions(spark)
     val rows = Seq(Decomposed, "plain ascii", "Åpple")
       .toDF("s")
       .select(col("s"), TextFunctions.nfcNormalize(col("s")).as("n"))
@@ -29,7 +29,7 @@ class TextExpressionSpec extends SparkSpec {
 
   test("codegen output is identical to interpreted eval") {
     import ss.implicits._
-    TextFunctions.register(spark)
+    Tables.registerFunctions(spark)
     val df = Tables.documents(spark, sf)
       .withColumn("dirty", regexp_replace(col("text"), "e", "é"))
     val viaCodegen = df.select(TextFunctions.nfcNormalize(col("dirty")))
@@ -74,7 +74,7 @@ class TextExpressionSpec extends SparkSpec {
   }
 
   test("nfc_normalize is SQL-callable after registration") {
-    TextFunctions.register(spark)
+    Tables.registerFunctions(spark)
     val out = spark.sql(s"SELECT nfc_normalize('é') AS n")
       .head().getString(0)
     assert(out == "é")

@@ -30,7 +30,7 @@ class VectorExpressionSpec extends SparkSpec {
   test("vec_dot is SQL-callable after registration") {
     // extensions hook must construct/apply cleanly
     new graft.functions.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    VectorFunctions.register(spark)
+    Tables.registerFunctions(spark)
     vecs.createOrReplaceTempView("emb_v")
     val r = spark.sql(
       "SELECT vec_dot(v, v) AS d FROM emb_v ORDER BY vec_id LIMIT 1").head

@@ -4,9 +4,8 @@
 Usage: oracle_check_par.py <verify_out_dir> <sf_dir> <result_json>
          [timeout_s] [workers] [only_csv]
 
-Same per-query semantics as oracle_check.py (sort columns, compare row
-counts then exact values, flag int/float dtype splits), but each oracle
-replays in its OWN killable subprocess under a hard wall-clock timeout:
+Per query: sort columns, compare row counts then exact values, flag
+int/float dtype splits. Each oracle replays in its OWN killable subprocess under a hard wall-clock timeout:
 some reference replays (the WITH RECURSIVE graph walks at sf0.1) are
 superlinear in DuckDB where the engine side is linear, and a compare
 harness must bound them rather than hang. Timeouts are recorded as
