@@ -11,11 +11,14 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.OptionalFilters
-import graft.warehouse.Ingest
+import graft.warehouse.{Gie, Ingest, Upsert}
 import graft.warehouse.Ingest.Warehouse
 
 /** The reference's process-level serving edge (`app/api/v2/routes.py`,
@@ -41,6 +44,18 @@ import graft.warehouse.Ingest.Warehouse
   * (OptionalFilters builds only-defined predicates, so Catalyst sees
   * sargable conjuncts and prunes partitions), and only the ≤5000
   * requested rows cross to the edge.
+  *
+  * Table resolution: every serving read takes its table from [[table]],
+  * which resolves each warehouse table once per file listing. A request
+  * costs one recursive listing per table it touches; the parquet read
+  * (file index and schema inference, a Spark job of its own) runs only
+  * when that listing differs from the one the cached frame was read
+  * from. Any write changes the listing — an append adds files, the
+  * upsert swap renames in new part files, a writer outside this server
+  * does the same — so the next request re-reads the table and sees the
+  * write, a new schema included. A table that does not exist (nothing
+  * landed yet) is the empty page: `[]`, or the bare header for
+  * `data.csv`.
   *
   * One deliberate addition over the reference: `GET /v2/ingest/jobs/N`
   * exposes the background job's terminal state. The reference's 202
@@ -81,9 +96,9 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     server.createContext("/v2/export/raw/json", handler(exportRawJson))
     server.createContext("/v2/export/raw/csv", handler(exportRawCsv))
     server.createContext("/v2/gie/agsi",
-      handler(gieIngest(graft.warehouse.Gie.DatasetAgsi, graft.warehouse.Gie.SourceAgsi)))
+      handler(gieIngest(Gie.DatasetAgsi, Gie.SourceAgsi)))
     server.createContext("/v2/gie/alsi",
-      handler(gieIngest(graft.warehouse.Gie.DatasetAlsi, graft.warehouse.Gie.SourceAlsi)))
+      handler(gieIngest(Gie.DatasetAlsi, Gie.SourceAlsi)))
     server.createContext("/v2/gie/data", handler(gieData))
     server.start()
     this
@@ -105,6 +120,13 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       * malformed value answers 400, never a 500. */
     def int(k: String): Option[Int] = typed(k, "an integer")(_.toIntOption)
     def double(k: String): Option[Double] = typed(k, "a number")(_.toDoubleOption)
+    /** Exactly what `CAST(k AS TIMESTAMP)` accepts under the session
+      * zone (ANSI mode would throw at execution instead); the validated
+      * string is returned for that cast. */
+    def timestamp(k: String): Option[String] = typed(k, "a timestamp") { v =>
+      val zone = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone"))
+      DateTimeUtils.stringToTimestamp(UTF8String.fromString(v), zone).map(_ => v)
+    }
     private def typed[T](k: String, kind: String)(parse: String => Option[T]): Option[T] =
       first(k).map(v => parse(v).getOrElse(throw BadParam(s"$k must be $kind")))
   }
@@ -157,6 +179,37 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     }
   }
 
+  // ---------------------------------------------------------------- tables
+
+  /** A resolved table and the file listing it was read from. */
+  private case class Resolved(listing: Seq[(String, Long, Long)], frame: DataFrame)
+  // keyed by table path: at most the seven warehouse tables served here
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  /** The one way a route reads a warehouse table (see class doc). The
+    * existence probe runs the warehouse's swap recovery first, so a read
+    * route self-heals an interrupted overwrite like every writer does.
+    * The listing is taken BEFORE the read: a write landing in between
+    * leaves a stored listing older than the frame, which only costs one
+    * extra re-read on the next request, never a stale page. */
+  private def table(path: String): Option[DataFrame] = {
+    if (!Upsert.tableExists(spark, path)) return None
+    val dir = new Path(path)
+    val files = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+      .listFiles(dir, true)
+    val listing = Vector.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val current = listing.result().sorted
+    Option(resolved.get(path)).filter(_.listing == current).map(_.frame).orElse {
+      val frame = spark.read.parquet(path)
+      resolved.put(path, Resolved(current, frame))
+      Some(frame)
+    }
+  }
+
   // ------------------------------------------------------------- endpoints
 
   /** `health.py:6-8`. */
@@ -175,19 +228,20 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [0, 5000]")))
     val offset = math.max(0, r.int("offset").getOrElse(0))
     val (minValue, maxValue) = (r.double("min_value"), r.double("max_value"))
+    val (start, end) = (r.timestamp("start"), r.timestamp("end"))
     val includeRaw = r.first("include_raw").exists(_.equalsIgnoreCase("true"))
 
-    val obs = spark.read.parquet(wh.observations)
-    val meta = spark.read.parquet(wh.metaSeries)
+    val (obs, meta) = (table(wh.observations), table(wh.metaSeries)) match {
+      case (Some(o), Some(m)) => (o, m)
+      case _ => return Response(200, "[]")
+    }
     // only-defined conjuncts: absent params contribute NO predicate, so
     // the scan keeps its pushdown (the F1 operator, OptionalFilters)
     val filtered = OptionalFilters(obs,
       OptionalFilters.eqOpt(col("series_id"), r.first("series_id")),
       OptionalFilters.eqOpt(col("quality_flag"), r.first("quality_flag")),
-      OptionalFilters.geOpt(col("observation_time"),
-        r.first("start").map(lit(_).cast("timestamp"))),
-      OptionalFilters.leOpt(col("observation_time"),
-        r.first("end").map(lit(_).cast("timestamp"))),
+      OptionalFilters.geOpt(col("observation_time"), start.map(lit(_).cast("timestamp"))),
+      OptionalFilters.leOpt(col("observation_time"), end.map(lit(_).cast("timestamp"))),
       OptionalFilters.geOpt(col("value"), minValue),
       OptionalFilters.leOpt(col("value"), maxValue))
     // raw_payload is selected ONLY when asked for — column pruning keeps
@@ -250,9 +304,9 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   /** `discovery.py:9-15`. */
   private def datasets(r: Request): Response = {
-    val ds = spark.read.parquet(wh.rawEvents)
-      .select("dataset_id").distinct().orderBy("dataset_id")
-      .collect().map(r0 => jsonStr(r0.getString(0)))
+    val ds = table(wh.rawEvents).toSeq.flatMap(
+      _.select("dataset_id").distinct().orderBy("dataset_id")
+        .collect().map(r0 => jsonStr(r0.getString(0))))
     Response(200, ds.mkString("[", ",", "]"))
   }
 
@@ -262,13 +316,13 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
       case Some(ds) =>
-        val rows = spark.read.parquet(wh.fieldCatalog)
-          .filter(col("dataset_id") === ds)
-          .orderBy("field_name")
-          .select(col("field_name").as("field"),
-            col("inferred_type").as("type"),
-            col("nullable"), col("example_value").as("example"))
-          .toJSON.collect()
+        val rows = table(wh.fieldCatalog).toSeq.flatMap(
+          _.filter(col("dataset_id") === ds)
+            .orderBy("field_name")
+            .select(col("field_name").as("field"),
+              col("inferred_type").as("type"),
+              col("nullable"), col("example_value").as("example"))
+            .toJSON.collect())
         Response(200, rows.mkString("[", ",", "]"))
     }
 
@@ -281,11 +335,11 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case Some(ds) =>
         // newest-first needs a total order for a stable page: tie-break
         // the (second-grain) ingest stamp by event_id
-        val rows = spark.read.parquet(wh.rawEvents)
-          .filter(col("dataset_id") === ds)
-          .orderBy(col("ingested_at").desc, col("event_id").desc)
-          .limit(limit)
-          .select("raw_payload").collect().map(r0 => jsonStr(r0.getString(0)))
+        val rows = table(wh.rawEvents).toSeq.flatMap(
+          _.filter(col("dataset_id") === ds)
+            .orderBy(col("ingested_at").desc, col("event_id").desc)
+            .limit(limit)
+            .select("raw_payload").collect().map(r0 => jsonStr(r0.getString(0))))
         Response(200, rows.mkString("[", ",", "]"))
     }
   }
@@ -472,21 +526,19 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
       case Some(ds) =>
-        // nothing landed yet → the empty page, like empty tables
-        if (!graft.warehouse.Upsert.tableExists(spark, wh.rawEvents))
-          return Response(200, "[]")
-        val base = spark.read.parquet(wh.rawEvents)
-          .filter(col("dataset_id") === ds)
-        val filtered = siteId match {
-          case Some(v) =>
-            base.filter(get_json_object(col("raw_payload"), "$.siteId")
-              .try_cast("int") === v)
-          case None => base
+        val payloads = table(wh.rawEvents).toSeq.flatMap { raw =>
+          val base = raw.filter(col("dataset_id") === ds)
+          val filtered = siteId match {
+            case Some(v) =>
+              base.filter(get_json_object(col("raw_payload"), "$.siteId")
+                .try_cast("int") === v)
+            case None => base
+          }
+          filtered
+            .orderBy(col("ingested_at").desc, col("event_id").desc)
+            .limit(limit)
+            .select("raw_payload").collect().map(_.getString(0))
         }
-        val payloads = filtered
-          .orderBy(col("ingested_at").desc, col("event_id").desc)
-          .limit(limit)
-          .select("raw_payload").collect().map(_.getString(0))
         Response(200, payloads.mkString("[", ",", "]"))
     }
   }
@@ -511,18 +563,19 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     val limit = math.min(
       r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows),
       graft.sources.Exports.MaxExportRows)
-    val obs = spark.read.parquet(wh.observations)
-    val filtered = OptionalFilters(obs,
-      OptionalFilters.eqOpt(col("series_id"), r.first("series_id")))
-      .orderBy("series_id", "observation_time")
-      .limit(limit)
-      .select(col("series_id"),
-        date_format(col("observation_time"), "yyyy-MM-dd'T'HH:mm:ss").as("observation_time"),
-        col("value").cast("string"), col("quality_flag"))
     val header = "series_id,observation_time,value,quality_flag"
-    val lines = filtered.toLocalIterator.asScala.map { row =>
-      "\n" + (0 until 4).map(i => Option(row.getString(i)).getOrElse("")).mkString(",")
-    }
+    val lines = table(wh.observations).map { obs =>
+      OptionalFilters(obs,
+        OptionalFilters.eqOpt(col("series_id"), r.first("series_id")))
+        .orderBy("series_id", "observation_time")
+        .limit(limit)
+        .select(col("series_id"),
+          date_format(col("observation_time"), "yyyy-MM-dd'T'HH:mm:ss").as("observation_time"),
+          col("value").cast("string"), col("quality_flag"))
+        .toLocalIterator.asScala.map { row =>
+          "\n" + (0 until 4).map(i => Option(row.getString(i)).getOrElse("")).mkString(",")
+        }
+    }.getOrElse(Iterator.empty)
     Response(200, "", contentType = "text/csv",
       chunks = Some(Iterator(header) ++ lines))
   }
@@ -540,11 +593,11 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Left(Response(400, jsonObj("detail" -> jsonStr("dataset_id is required"))))
       case Some(ds) =>
-        Right(spark.read.parquet(wh.rawEvents)
-          .filter(col("dataset_id") === ds)
-          .orderBy(col("ingested_at").desc, col("event_id").desc)
-          .limit(limit)
-          .select("raw_payload").collect().map(_.getString(0)))
+        Right(table(wh.rawEvents).toArray.flatMap(
+          _.filter(col("dataset_id") === ds)
+            .orderBy(col("ingested_at").desc, col("event_id").desc)
+            .limit(limit)
+            .select("raw_payload").collect().map(_.getString(0))))
     }
   }
 
@@ -606,7 +659,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     if (r.method != "POST")
       return Response(405, jsonObj("detail" -> jsonStr("use POST")))
     val country = r.first("country")
-    graft.warehouse.Gie.ingest(spark, wh, dataset, source, country, gieUrl)
+    Gie.ingest(spark, wh, dataset, source, country, gieUrl)
     Response(200, jsonObj(
       "status" -> jsonStr("completed"),
       "dataset" -> jsonStr(dataset),
@@ -624,13 +677,14 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("source is required")))
       case Some(src) =>
-        // an un-ingested star serves the empty page, like empty tables
-        if (!graft.warehouse.Upsert.tableExists(
-            spark, graft.warehouse.Gie.dailyPath(wh)))
-          return Response(200, "[]")
-        val rows = graft.warehouse.Gie.dataQuery(spark, wh, src,
+        val rows = (for {
+          daily <- table(Gie.dailyPath(wh))
+          series <- table(Gie.seriesPath(wh))
+          assets <- table(Gie.assetsPath(wh))
+        } yield Gie.dataQuery(daily, series, assets, src,
           r.first("country"), r.first("variable"),
-          r.first("start_date"), r.first("end_date"), limit).collect()
+          r.first("start_date"), r.first("end_date"), limit).collect())
+          .getOrElse(Array.empty)
         val body = rows.map { row =>
           jsonObj(
             "date" -> jsonStr(row.getDate(0).toString),

@@ -239,20 +239,18 @@ object Gie {
 
   // ------------------------------------------------------------------- read
 
-  /** `gie.py:22-58`: the star-join read with the dynamic WHERE stack.
+  /** `gie.py:22-58`: the star-join read with the dynamic WHERE stack,
+    * over the caller's `gie_daily`, `gie_series` and `gie_assets` frames.
     * Dims broadcast; `ORDER BY value_date DESC LIMIT n` is a top-k
     * (TakeOrderedAndProject), never a global sort. Tie-breaks beyond
     * the reference's bare date ordering keep pages deterministic. */
-  def dataQuery(s: SparkSession, wh: Ingest.Warehouse, source: String,
-                country: Option[String], variable: Option[String],
+  def dataQuery(daily: DataFrame, series: DataFrame, assets: DataFrame,
+                source: String, country: Option[String], variable: Option[String],
                 startDate: Option[String], endDate: Option[String],
                 limit: Int): DataFrame = {
-    val d = s.read.parquet(dailyPath(wh))
-    val sr = s.read.parquet(seriesPath(wh))
-    val a = s.read.parquet(assetsPath(wh))
-    val joined = d
-      .join(broadcast(sr.select("series_id", "variable", "source")), Seq("series_id"))
-      .join(broadcast(a.select("asset_id", "asset_name")), Seq("asset_id"))
+    val joined = daily
+      .join(broadcast(series.select("series_id", "variable", "source")), Seq("series_id"))
+      .join(broadcast(assets.select("asset_id", "asset_name")), Seq("asset_id"))
     OptionalFilters(joined,
       Some(col("source") === source),
       OptionalFilters.eqOpt(col("asset_name"), country),

@@ -4,8 +4,14 @@ import java.io.ByteArrayOutputStream
 import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, current_timestamp, lit}
 
 import graft.serving.QueryServer
+import graft.warehouse.Upsert
 import graft.warehouse.Ingest.Warehouse
 
 /** End-to-end drive of the serving edge over a real loopback socket:
@@ -70,6 +76,17 @@ class QueryServerSpec extends SparkSpec {
     val wh = Warehouse(root)
     val srv = new QueryServer(spark, wh).start()
     try body(srv, wh) finally srv.stop()
+  }
+
+  /** POST the stub gas ingest for [from, to] and wait for its job. */
+  private def ingestGas(srv: QueryServer, from: String, to: String): Unit = {
+    val (st, body) = http("POST",
+      s"${srv.url}/v2/ingest/gas?from_date=$from&to_date=$to")
+    assert(st === 202, body)
+    val jobId = "\"job_id\":(\\d+)".r.findFirstMatchIn(body).get.group(1)
+    assert(await {
+      http("GET", s"${srv.url}/v2/ingest/jobs/$jobId")._2.contains("done")
+    }, "ingest job did not finish")
   }
 
   test("serving edge: 202 ingest → background drain → data/discovery/export round-trip") {
@@ -447,6 +464,8 @@ class QueryServerSpec extends SparkSpec {
         "/v2/data?offset=1.5" -> "offset must be an integer",
         "/v2/data?min_value=low" -> "min_value must be a number",
         "/v2/data?max_value=high" -> "max_value must be a number",
+        "/v2/data?start=abc" -> "start must be a timestamp",
+        "/v2/data?end=2024-13-45" -> "end must be a timestamp",
         "/v2/discovery/sample?dataset_id=GQ&limit=ten" -> "limit must be an integer",
         "/v2/discovery/raw?dataset_id=GQ&limit=ten" -> "limit must be an integer",
         "/v2/export/data.csv?limit=ten" -> "limit must be an integer",
@@ -652,6 +671,93 @@ class QueryServerSpec extends SparkSpec {
         s"${srv.url}/v2/data?series_id=NG_GAS_QUALITY_STFERGUS_WOBBE")
       assert(s2 === 200)
       assert(b2 === golden("golden_v2_data.json"))
+    }
+  }
+
+  test("empty warehouse: every read route serves the empty page, never a 500") {
+    // nothing landed yet: each route's tables are absent, which is the
+    // empty page (class doc); data.csv keeps its header line. Valid
+    // start/end values pass the timestamp parser on the way.
+    withServer { (srv, _) =>
+      Seq(
+        "/v2/data",
+        "/v2/data?series_id=S&start=2024-01-01&end=2024-01-02T00:00:00Z",
+        "/v2/discovery/datasets",
+        "/v2/discovery/fields?dataset_id=GQ",
+        "/v2/discovery/sample?dataset_id=GQ",
+        "/v2/discovery/raw?dataset_id=GQ",
+        "/v2/export/raw/json?dataset_id=GQ",
+        "/v2/gie/data?source=GIE_AGSI"
+      ).foreach { q =>
+        assert(http("GET", s"${srv.url}$q") === ((200, "[]")), q)
+      }
+      assert(http("GET", s"${srv.url}/v2/export/data.csv") ===
+        ((200, "series_id,observation_time,value,quality_flag")))
+      assert(http("GET", s"${srv.url}/v2/export/raw/csv?dataset_id=GQ") === ((200, "")))
+    }
+  }
+
+  test("table resolver: a write behind the live server shows on the next request") {
+    withServer { (srv, wh) =>
+      ingestGas(srv, "2024-01-01", "2024-01-02")
+      val sid = "NG_GAS_QUALITY_STFERGUS_WOBBE"
+      val q = s"${srv.url}/v2/data?series_id=$sid&limit=1"
+      val valueOf = (body: String) =>
+        "\"value\":([^,]+),".r.findFirstMatchIn(body).get.group(1).toDouble
+      // two reads: the second is served from the resolved tables
+      val first = valueOf(http("GET", q)._2)
+      assert(valueOf(http("GET", q)._2) === first)
+
+      // overwrite swap: upsert a revised value from outside the server
+      val revised = spark.read.parquet(wh.observations)
+        .filter(col("series_id") === sid).orderBy("observation_time").limit(1)
+        .withColumn("value", lit(first + 1000))
+        .withColumn("ingestion_time", current_timestamp())
+        .localCheckpoint()
+      Upsert.upsert(spark, wh.observations, revised,
+        Seq("series_id", "observation_time"), "ingestion_time")
+      assert(valueOf(http("GET", q)._2) === first + 1000)
+
+      // schema change: meta_series without `unit` serves the default,
+      // then an overwrite that adds the column serves its value
+      val meta = spark.read.parquet(wh.metaSeries).localCheckpoint()
+      Upsert.overwriteInPlace(spark, wh.metaSeries, meta.drop("unit"))
+      val (s1, b1) = http("GET", q)
+      assert(s1 === 200 && b1.contains("\"unit\":\"UNKNOWN\""), b1)
+      Upsert.overwriteInPlace(spark, wh.metaSeries, meta.withColumn("unit", lit("MJ/m3")))
+      val (s2, b2) = http("GET", q)
+      assert(s2 === 200 && b2.contains("\"unit\":\"MJ/m3\""), b2)
+    }
+  }
+
+  test("table resolver: a repeated /v2/data request skips both table reads") {
+    // the first request over a fresh server reads observations and
+    // meta_series (each read runs a schema-inference job); a repeat over
+    // the unchanged warehouse reuses both frames
+    val wh = Warehouse(Files.createTempDirectory("graft-serve-jobs").toString)
+    val builder = new QueryServer(spark, wh).start()
+    try ingestGas(builder, "2024-01-01", "2024-01-02") finally builder.stop()
+    val started = new AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val srv = new QueryServer(spark, wh).start()
+    try {
+      val q = s"${srv.url}/v2/data?series_id=NG_GAS_QUALITY_STFERGUS_WOBBE"
+      def jobsOf(): Int = {
+        ListenerBusDrain(spark.sparkContext)
+        val before = started.get()
+        assert(http("GET", q)._1 === 200)
+        ListenerBusDrain(spark.sparkContext)
+        started.get() - before
+      }
+      val first = jobsOf()
+      val second = jobsOf()
+      assert(first - second === 2, s"first request $first jobs, repeat $second")
+    } finally {
+      srv.stop()
+      spark.sparkContext.removeSparkListener(counter)
     }
   }
 }
