@@ -12,7 +12,7 @@ import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,23 +39,32 @@ import graft.warehouse.Ingest.Warehouse
   * enforces (`limit le=5000` on /v2/data, `le=50` on discovery/sample,
   * 50k on exports): every collect here is over a capped frame, so the
   * edge never materializes a data-proportional result — the same
-  * contract as [[graft.sources.Exports]]. At 100 TB the server is a
-  * driver-side veneer: all filtering/joining runs in the cluster plan
-  * (OptionalFilters builds only-defined predicates, so Catalyst sees
-  * sargable conjuncts and prunes partitions), and only the ≤5000
-  * requested rows cross to the edge.
+  * contract as [[graft.sources.Exports]]. The one uncapped collect is
+  * meta_series, a dimension of one row per series (see below). At
+  * 100 TB the server is a driver-side veneer: all filtering runs in the
+  * cluster plan (OptionalFilters builds only-defined predicates, so
+  * Catalyst sees sargable conjuncts and prunes partitions), and only
+  * the ≤5000 requested rows cross to the edge, where /v2/data attaches
+  * each series' metadata.
   *
   * Table resolution: every serving read takes its table from [[table]],
   * which resolves each warehouse table once per file listing. A request
-  * costs one recursive listing per table it touches; the parquet read
-  * (file index and schema inference, a Spark job of its own) runs only
-  * when that listing differs from the one the cached frame was read
-  * from. Any write changes the listing — an append adds files, the
-  * upsert swap renames in new part files, a writer outside this server
-  * does the same — so the next request re-reads the table and sees the
-  * write, a new schema included. A table that does not exist (nothing
-  * landed yet) is the empty page: `[]`, or the bare header for
-  * `data.csv`.
+  * costs one listing per table it touches, a `listStatus` walk that
+  * forks no process; the parquet read (file index and schema inference,
+  * a Spark job of its own) runs only when that listing differs from the
+  * one the cached frame was read from. Any write changes the listing —
+  * an append adds files, the upsert swap renames in new part files, a
+  * writer outside this server does the same — so the next request
+  * re-reads the table and sees the write, a new schema included.
+  * meta_series is a per-listing dimension: its rows are collected to the
+  * driver once per listing, and /v2/data joins them to its page there,
+  * so a warm /v2/data request is one Spark job. A table that does not
+  * exist (nothing landed yet) is the empty page: `[]`, or the bare
+  * header for `data.csv`.
+  *
+  * Every response closes its connection: the JDK server sends the body
+  * as a second small segment, which a kept-alive connection would hold
+  * for the client's delayed ACK (Nagle), about 40 ms a response.
   *
   * One deliberate addition over the reference: `GET /v2/ingest/jobs/N`
   * exposes the background job's terminal state. The reference's 202
@@ -120,6 +129,9 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       * malformed value answers 400, never a 500. */
     def int(k: String): Option[Int] = typed(k, "an integer")(_.toIntOption)
     def double(k: String): Option[Double] = typed(k, "a number")(_.toDoubleOption)
+    /** A row count: negative is a 400 too (Spark's `limit` would 500). */
+    def count(k: String): Option[Int] =
+      int(k).map(v => if (v < 0) throw BadParam(s"$k must be >= 0") else v)
     /** Exactly what `CAST(k AS TIMESTAMP)` accepts under the session
       * zone (ANSI mode would throw at execution instead); the validated
       * string is returned for that cast. */
@@ -159,6 +171,10 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
         }
       x.getResponseHeaders.add("Content-Type", resp.contentType)
+      // the JDK server writes the headers and the body as two segments;
+      // on a kept-alive connection Nagle holds the second one until the
+      // client's delayed ACK (~40 ms). Closing the connection flushes it.
+      x.getResponseHeaders.add("Connection", "close")
       resp.headers.foreach { case (k, v) => x.getResponseHeaders.add(k, v) }
       resp.chunks match {
         case Some(it) =>
@@ -181,8 +197,13 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   // ---------------------------------------------------------------- tables
 
-  /** A resolved table and the file listing it was read from. */
-  private case class Resolved(listing: Seq[(String, Long, Long)], frame: DataFrame)
+  /** A resolved table and the file listing it was read from. `rows` is
+    * the table collected to the driver on first use: a dimension small
+    * enough for the edge (meta_series) costs one Spark job per listing,
+    * not one per request. */
+  private final class Resolved(val listing: Seq[(String, Long, Long)], val frame: DataFrame) {
+    lazy val rows: Array[Row] = frame.collect()
+  }
   // keyed by table path: at most the seven warehouse tables served here
   private val resolved = new ConcurrentHashMap[String, Resolved]()
 
@@ -192,23 +213,27 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * The listing is taken BEFORE the read: a write landing in between
     * leaves a stored listing older than the frame, which only costs one
     * extra re-read on the next request, never a stale page. */
-  private def table(path: String): Option[DataFrame] = {
+  private def resolve(path: String): Option[Resolved] = {
     if (!Upsert.tableExists(spark, path)) return None
     val dir = new Path(path)
-    val files = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-      .listFiles(dir, true)
+    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
+    // a listStatus walk, not listFiles: the local FS builds each
+    // LocatedFileStatus by forking `ls` for the file's permissions
     val listing = Vector.newBuilder[(String, Long, Long)]
-    while (files.hasNext) {
-      val f = files.next()
-      listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
     }
+    walk(dir)
     val current = listing.result().sorted
-    Option(resolved.get(path)).filter(_.listing == current).map(_.frame).orElse {
-      val frame = spark.read.parquet(path)
-      resolved.put(path, Resolved(current, frame))
-      Some(frame)
+    Option(resolved.get(path)).filter(_.listing == current).orElse {
+      val fresh = new Resolved(current, spark.read.parquet(path))
+      resolved.put(path, fresh)
+      Some(fresh)
     }
   }
+
+  private def table(path: String): Option[DataFrame] = resolve(path).map(_.frame)
 
   // ------------------------------------------------------------- endpoints
 
@@ -231,13 +256,23 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     val (start, end) = (r.timestamp("start"), r.timestamp("end"))
     val includeRaw = r.first("include_raw").exists(_.equalsIgnoreCase("true"))
 
-    val (obs, meta) = (table(wh.observations), table(wh.metaSeries)) match {
+    val (obs, meta) = (table(wh.observations), resolve(wh.metaSeries)) match {
       case (Some(o), Some(m)) => (o, m)
       case _ => return Response(200, "[]")
     }
+    // the inner join with meta_series, on the driver: the dataset filter
+    // picks the series, and observations of any other series (orphans
+    // included) never reach the page
+    val dataset = r.first("dataset_id")
+    val metaOf = meta.rows.iterator
+      .filter(m => m.getAs[String]("series_id") != null &&
+        dataset.forall(_ == m.getAs[String]("dataset_id")))
+      .map(m => m.getAs[String]("series_id") -> m).toMap
+    if (metaOf.isEmpty) return Response(200, "[]")
     // only-defined conjuncts: absent params contribute NO predicate, so
     // the scan keeps its pushdown (the F1 operator, OptionalFilters)
     val filtered = OptionalFilters(obs,
+      Some(col("series_id").isin(metaOf.keys.toSeq: _*)),
       OptionalFilters.eqOpt(col("series_id"), r.first("series_id")),
       OptionalFilters.eqOpt(col("quality_flag"), r.first("quality_flag")),
       OptionalFilters.geOpt(col("observation_time"), start.map(lit(_).cast("timestamp"))),
@@ -249,54 +284,48 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     val rawCol =
       if (includeRaw && obs.columns.contains("raw_payload")) col("raw_payload")
       else lit(null).cast("string")
+    // the reference pages the FLAT rows (LIMIT/OFFSET in DATA_QUERY),
+    // then groups the page in the handler — same here, and the page is
+    // what bounds the edge collect
+    val page = filtered
+      .orderBy("series_id", "observation_time")
+      .select(col("series_id"), col("observation_time"), col("value"),
+        col("quality_flag"), rawCol.as("raw_payload"))
+      .offset(offset).limit(limit).collect()
+
     // unit/frequency ride from meta_series (schemas.py:13-17) — but
     // SeriesResponse declares them REQUIRED str (pydantic would raise,
     // never serialize None), so a warehouse written before they were
     // registered falls back to the autoregister defaults
     // (series_autoregister.py: "UNKNOWN" / "intraday") instead of null
-    def metaOpt(c: String, default: String) =
-      if (meta.columns.contains(c)) coalesce(col(c), lit(default))
-      else lit(default)
-    val joined = filtered
-      .join(broadcast(OptionalFilters(meta,
-        OptionalFilters.eqOpt(col("dataset_id"), r.first("dataset_id")))),
-        Seq("series_id"))
-      .orderBy("series_id", "observation_time")
-      .select(col("series_id"), col("dataset_id"), col("description"),
-        col("observation_time"), col("value"), col("quality_flag"),
-        rawCol.as("raw_payload"),
-        metaOpt("unit", "UNKNOWN").as("unit"),
-        metaOpt("frequency", "intraday").as("frequency"))
-    // the reference pages the FLAT rows (LIMIT/OFFSET in DATA_QUERY),
-    // then groups the page in the handler — same here, and the page is
-    // what bounds the edge collect
-    val page = joined.offset(offset).limit(limit).collect()
-
+    def metaStr(m: Row, c: String, default: String): String =
+      if (m.schema.fieldNames.contains(c)) Option(m.getAs[String](c)).getOrElse(default)
+      else default
     // field names AND order are the pydantic declaration order
     // (schemas.py:6-19: SeriesResponse / DataPoint under
     // response_model=list[SeriesResponse]); Optional fields
     // (quality_flag, raw_payload) render absent values as JSON null
     // exactly as pydantic serializes None, while the required-str
-    // fields (unit, frequency) are backfilled above — the golden
-    // fixture in QueryServerSpec pins this byte-for-byte
+    // fields (unit, frequency) are backfilled — the golden fixture in
+    // QueryServerSpec pins this byte-for-byte
     val series = page.groupBy(r => r.getString(0)).toSeq.sortBy(_._1).map {
       case (sid, rows) =>
-        val head = rows.head
+        val m = metaOf(sid)
         val points = rows.map { p =>
           jsonObj(
-            "timestamp" -> jsonStr(p.getTimestamp(3).toInstant.toString),
-            "value" -> p.getDouble(4).toString,
-            "quality_flag" -> Option(p.getString(5)).map(jsonStr).getOrElse("null"),
+            "timestamp" -> jsonStr(p.getTimestamp(1).toInstant.toString),
+            "value" -> p.getDouble(2).toString,
+            "quality_flag" -> Option(p.getString(3)).map(jsonStr).getOrElse("null"),
             // the landed payload IS JSON (zero-loss landing) — splice
             // verbatim, the JSONB render the reference returns
-            "raw_payload" -> Option(p.getString(6)).getOrElse("null"))
+            "raw_payload" -> Option(p.getString(4)).getOrElse("null"))
         }
         jsonObj(
           "series_id" -> jsonStr(sid),
-          "dataset_id" -> jsonStr(head.getString(1)),
-          "description" -> jsonStr(head.getString(2)),
-          "unit" -> Option(head.getString(7)).map(jsonStr).getOrElse("null"),
-          "frequency" -> Option(head.getString(8)).map(jsonStr).getOrElse("null"),
+          "dataset_id" -> jsonStr(m.getAs[String]("dataset_id")),
+          "description" -> jsonStr(m.getAs[String]("description")),
+          "unit" -> jsonStr(metaStr(m, "unit", "UNKNOWN")),
+          "frequency" -> jsonStr(metaStr(m, "frequency", "intraday")),
           "points" -> points.mkString("[", ",", "]"))
     }
     Response(200, series.mkString("[", ",", "]"))
@@ -328,7 +357,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   /** `discovery.py:43-57`: newest raw payloads, cap 50. */
   private def sample(r: Request): Response = {
-    val limit = math.min(r.int("limit").getOrElse(5), 50)
+    val limit = math.min(r.count("limit").getOrElse(5), 50)
     r.first("dataset_id") match {
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
@@ -561,7 +590,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * export — the reference's StreamingResponse contract. */
   private def exportCsv(r: Request): Response = {
     val limit = math.min(
-      r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows),
+      r.count("limit").getOrElse(graft.sources.Exports.DefaultPageRows),
       graft.sources.Exports.MaxExportRows)
     val header = "series_id,observation_time,value,quality_flag"
     val lines = table(wh.observations).map { obs =>

@@ -471,7 +471,9 @@ class QueryServerSpec extends SparkSpec {
         "/v2/export/data.csv?limit=ten" -> "limit must be an integer",
         "/v2/export/raw/json?dataset_id=GQ&limit=ten" -> "limit must be an integer",
         "/v2/export/raw/csv?dataset_id=GQ&limit=ten" -> "limit must be an integer",
-        "/v2/gie/data?source=GIE_AGSI&limit=ten" -> "limit must be an integer"
+        "/v2/gie/data?source=GIE_AGSI&limit=ten" -> "limit must be an integer",
+        "/v2/discovery/sample?dataset_id=GQ&limit=-1" -> "limit must be >= 0",
+        "/v2/export/data.csv?limit=-1" -> "limit must be >= 0"
       ).foreach { case (q, detail) =>
         val (status, body) = http("GET", s"${srv.url}$q")
         assert(status === 400 && body.contains(detail), s"$q -> $status $body")
@@ -732,8 +734,9 @@ class QueryServerSpec extends SparkSpec {
 
   test("table resolver: a repeated /v2/data request skips both table reads") {
     // the first request over a fresh server reads observations and
-    // meta_series (each read runs a schema-inference job); a repeat over
-    // the unchanged warehouse reuses both frames
+    // meta_series (each read runs a schema-inference job) and collects
+    // meta_series' rows; a repeat over the unchanged warehouse reuses
+    // both frames and the rows, so it runs the page's job alone
     val wh = Warehouse(Files.createTempDirectory("graft-serve-jobs").toString)
     val builder = new QueryServer(spark, wh).start()
     try ingestGas(builder, "2024-01-01", "2024-01-02") finally builder.stop()
@@ -754,10 +757,74 @@ class QueryServerSpec extends SparkSpec {
       }
       val first = jobsOf()
       val second = jobsOf()
-      assert(first - second === 2, s"first request $first jobs, repeat $second")
+      assert(second === 1, s"repeat ran $second jobs")
+      assert(first - second === 3, s"first request $first jobs, repeat $second")
     } finally {
       srv.stop()
       spark.sparkContext.removeSparkListener(counter)
+    }
+  }
+
+  test("/v2/data keeps the inner join: orphan observations and unknown datasets stay out") {
+    withServer { (srv, wh) =>
+      ingestGas(srv, "2024-01-01", "2024-01-02")
+      // an observation whose series has no meta_series row, and a series
+      // of a second dataset; both ids sort before the gas series
+      val obsRow = spark.read.parquet(wh.observations).limit(1)
+      obsRow.withColumn("series_id", lit("AAA_ORPHAN")).localCheckpoint()
+        .write.mode("append").parquet(wh.observations)
+      obsRow.withColumn("series_id", lit("AAB_OTHER")).localCheckpoint()
+        .write.mode("append").parquet(wh.observations)
+      spark.read.parquet(wh.metaSeries).limit(1)
+        .withColumn("series_id", lit("AAB_OTHER"))
+        .withColumn("dataset_id", lit("OTHER")).localCheckpoint()
+        .write.mode("append").parquet(wh.metaSeries)
+      val pointsOf = (body: String) =>
+        "\"series_id\":\"([^\"]+)\"[^\\]]*\"points\":\\[([^\\]]*)\\]".r
+          .findAllMatchIn(body).flatMap { m =>
+            "\"timestamp\":\"([^\"]+)\"".r.findAllMatchIn(m.group(2))
+              .map(t => (m.group(1), t.group(1)))
+          }.toSeq
+
+      // 9 gas series × 2 days, plus the other dataset's one point
+      val all = pointsOf(http("GET", s"${srv.url}/v2/data?limit=1000")._2)
+      assert(all.length === 19, all)
+      assert(!all.exists(_._1 == "AAA_ORPHAN"), all)
+      assert(all.head._1 === "AAB_OTHER", all)
+      assert(pointsOf(http("GET", s"${srv.url}/v2/data?offset=1&limit=2")._2) ===
+        all.slice(1, 3))
+      assert(http("GET", s"${srv.url}/v2/data?series_id=AAA_ORPHAN")._2 === "[]")
+
+      // the dataset filter applies before paging
+      val gas = pointsOf(http("GET", s"${srv.url}/v2/data?dataset_id=GAS_QUALITY&limit=1000")._2)
+      assert(gas === all.tail)
+      assert(pointsOf(http("GET",
+        s"${srv.url}/v2/data?dataset_id=GAS_QUALITY&offset=3&limit=2")._2) === gas.slice(3, 5))
+      assert(http("GET", s"${srv.url}/v2/data?dataset_id=OTHER")._2.contains("AAB_OTHER"))
+
+      // a dataset that matches no series serves the empty page
+      assert(http("GET", s"${srv.url}/v2/data?dataset_id=NO_SUCH_DATASET") === ((200, "[]")))
+    }
+  }
+
+  test("responses are not held by Nagle: back-to-back requests answer in milliseconds") {
+    withServer { (srv, wh) =>
+      // keep-alive GETs, as HttpURLConnection sends them by default: a
+      // body held for the client's delayed ACK reads about 40 ms each
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(http("GET", s"${srv.url}/health") === ((200, "{\"status\":\"ok\"}")))
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.length / 2) < 20.0, s"/health latencies (ms): $ms")
+
+      // a streamed body still round-trips whole
+      ingestGas(srv, "2024-01-01", "2024-01-02")
+      val (st, csv, hdr) = httpFull("GET", s"${srv.url}/v2/export/data.csv?limit=100")
+      assert(st === 200 && hdr.get("transfer-encoding").exists(_.contains("chunked")), hdr)
+      val lines = csv.split("\n")
+      assert(lines.head === "series_id,observation_time,value,quality_flag")
+      assert(lines.length === 1 + 9 * 2, csv)
     }
   }
 }
