@@ -138,7 +138,7 @@ object Layout {
     // correctly
     val totalBytes = fs.getContentSummary(new Path(path)).getLength
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.read(spark, path)
     val laidOut =
       if (sortCols.nonEmpty)
         df.repartitionByRange(nFiles, sortCols.map(col): _*)

@@ -1748,7 +1748,7 @@ object Analytics {
     graft.Stage.ensure(root) { tmp =>
       partials(ev.filter(col("event_id") % 5 =!= 0)).write.parquet(tmp)
     }
-    val base = s.read.parquet(root)
+    val base = Tables.read(s, root)
     val delta = partials(ev.filter(col("event_id") % 5 === 0))
     base.unionByName(delta)
       .groupBy("user_id", "day")
@@ -1798,7 +1798,7 @@ object Analytics {
     graft.Stage.ensure(root) { tmp =>
       joinAgg(oBase, lBase).write.parquet(tmp)
     }
-    val base = s.read.parquet(root)
+    val base = Tables.read(s, root)
     val delta = joinAgg(oDelta, lBase)
       .unionByName(joinAgg(oBase, lDelta))
       .unionByName(joinAgg(oDelta, lDelta))

@@ -504,7 +504,7 @@ object Dedup {
         .coalesce(1)
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   /** (s, ds array<doc_id>) — every shingle with its cap-bounded doc
@@ -531,7 +531,7 @@ object Dedup {
         .repartition(8, col("s"))
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   val prefixJoinSql: String =
@@ -600,7 +600,7 @@ object Dedup {
       minhashSignaturesFrom(shingleRows(s, d)).repartition(8, col("doc_id"))
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   /** Signature build over an existing (doc_id, s) shingle stream — lets
@@ -871,7 +871,7 @@ object Dedup {
       simhashSignaturesOf(Tables.documents(s, d)).repartition(8, col("doc_id"))
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   private[graft] def simhashSignaturesOf(docs: DataFrame): DataFrame = {

@@ -64,7 +64,7 @@ object Discovery {
           get_json_object(col("props"), "$.k").cast("int"))
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   def shredded(s: SparkSession, d: String): DataFrame =

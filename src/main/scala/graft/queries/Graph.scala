@@ -66,7 +66,7 @@ object Graph {
         .distinct().repartition(8, col("cust"))
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   private def edges(s: SparkSession, d: String): DataFrame = {
@@ -593,7 +593,7 @@ object Graph {
     graft.Stage.ensure(root) { tmp =>
       multiSourceBfsDerive(s, d).repartition(4, col("src")).write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   private def multiSourceBfsDerive(s: SparkSession, d: String): DataFrame = {

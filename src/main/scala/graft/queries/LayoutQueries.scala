@@ -102,7 +102,7 @@ object LayoutQueries {
         Tables.events(s, d).select("event_id", "user_id", "ts", "event_type", "value"),
         tmp, "ts", Seq("user_id", "ts"))
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   def prunedHistory(s: SparkSession, d: String): DataFrame =
@@ -180,7 +180,7 @@ object LayoutQueries {
         .sortWithinPartitions("z")
         .write.parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
       .filter(col("user_id").between(3, 9) && col("day_idx").between(10, 19))
       .select("event_id", "user_id", "day_idx", "z", "value")
       .orderBy("event_id")
@@ -233,7 +233,7 @@ object LayoutQueries {
         sortCols = Seq("user_id", "ts"))
       new java.io.File(s"$tmp/_COMPACTED").createNewFile(): Unit
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
       .filter(col("user_id") === 7 &&
         col("ts").between(
           java.sql.Timestamp.valueOf("2024-01-05 00:00:00"),
@@ -284,7 +284,7 @@ object LayoutQueries {
 
   /** The relational manifest: per-file min/max/count on the cluster key. */
   private[graft] def minMaxManifest(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(root)
+    Tables.read(s, root)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(min(col("user_id")).as("min_u"), max(col("user_id")).as("max_u"),
         count(lit(1)).as("n_rows"))
@@ -305,7 +305,8 @@ object LayoutQueries {
       .filter(col("min_u") <= hi && col("max_u") >= lo)
       .select("file").collect().map(_.getString(0))
     val base =
-      if (files.isEmpty) s.read.parquet(root).filter(lit(false))
+      if (files.isEmpty) Tables.read(s, root).filter(lit(false))
+      // outside Tables.read: a pruned file list, not a table path
       else s.read.parquet(files.toIndexedSeq: _*)
     base
       .filter(col("user_id").between(lo, hi))

@@ -125,7 +125,7 @@ object Parity {
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
         maxDaysPerBatch = 7)
       q.awaitTermination()
-      ss.read.parquet(wh.observations)
+      Tables.read(ss, wh.observations)
         .select("series_id", "observation_time", "value", "quality_flag")
     }.orderBy("series_id", "observation_time")
   }
@@ -894,7 +894,7 @@ object Parity {
       graft.streaming.MicroBatch.drainOnce(ss, s"$root/src", s"$root/cp_up",
         s"$root/sink_up", ev)
     }
-    s.read.parquet(s"$root/sink_up")
+    Tables.read(s, s"$root/sink_up")
       .drop("ingestion_time")
       .orderBy("event_id")
   }
@@ -919,7 +919,7 @@ object Parity {
       graft.streaming.MicroBatch.drainDyadicTree(ss, s"$root/src",
         s"$root/cp_dy", s"$root/sink_dy", ev, maxFilesPerTrigger = Some(2))
     }
-    s.read.parquet(s"$root/sink_dy")
+    Tables.read(s, s"$root/sink_dy")
       .groupBy("level", "bucket").agg(sum(col("cnt")).as("cnt"))
       .orderBy("level", "bucket")
   }
@@ -952,7 +952,7 @@ object Parity {
       graft.streaming.MicroBatch.drainCdc(ss, s"$root/src", s"$root/cp_cdc",
         s"$root/sink_cdc", ev)
     }
-    s.read.parquet(s"$root/sink_cdc")
+    Tables.read(s, s"$root/sink_cdc")
       .filter(col("op") =!= "D")
       .select("user_id", "ts", "event_id", "value")
       .orderBy("user_id")
@@ -2104,6 +2104,7 @@ object Parity {
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.parquet(s"$tmp/gen=2")
     }
+    // outside Tables.read: the merged schema across generations is the point
     s.read.option("mergeSchema", "true").parquet(root)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus", "gen")
       .orderBy("o_orderkey")
@@ -2486,9 +2487,9 @@ object Parity {
       dataset = "GAS_QUALITY", timeCol = "obs_time", keyCols = Seq("site"))
     graft.warehouse.Ingest.ingestWide(s, wh, batch2,
       dataset = "GAS_QUALITY", timeCol = "obs_time", keyCols = Seq("site"))
-    val obs = s.read.parquet(wh.observations)
+    val obs = Tables.read(s, wh.observations)
       .select("series_id", "observation_time", "value")
-    val meta = s.read.parquet(wh.metaSeries).select("series_id", "description")
+    val meta = Tables.read(s, wh.metaSeries).select("series_id", "description")
     val out = obs.join(meta, "series_id").localCheckpoint()
     // the run-scoped warehouse is consumed — reclaim it now that the
     // result is materialized (a full-corpus warehouse per bench pass
@@ -2577,9 +2578,9 @@ object Parity {
     val root = s"${tmpRoot(kind, d)}/run_$runId"
     val wh = graft.warehouse.Ingest.Warehouse(root)
     ingest(wh)
-    val obs = s.read.parquet(wh.observations)
+    val obs = Tables.read(s, wh.observations)
       .select("series_id", "observation_time", "value", "quality_flag")
-    val meta = s.read.parquet(wh.metaSeries).select("series_id", "description")
+    val meta = Tables.read(s, wh.metaSeries).select("series_id", "description")
     val out = obs.join(meta, "series_id").localCheckpoint()
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), s.sparkContext.hadoopConfiguration)

@@ -1735,7 +1735,7 @@ object Similarity {
         .withColumn("cell", lloydBest(col("v"), cents).getField("cid").cast("long"))
         .write.partitionBy("cell").parquet(tmp)
     }
-    s.read.parquet(root)
+    Tables.read(s, root)
   }
 
   def ivfPrunedTopK(s: SparkSession, d: String): DataFrame = {

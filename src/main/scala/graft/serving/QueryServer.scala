@@ -11,12 +11,12 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Tables
 import graft.core.OptionalFilters
 import graft.warehouse.{Gie, Ingest, Upsert}
 import graft.warehouse.Ingest.Warehouse
@@ -48,12 +48,12 @@ import graft.warehouse.Ingest.Warehouse
   * each series' metadata.
   *
   * Table resolution: every serving read takes its table from [[table]],
-  * which resolves each warehouse table once per file listing. A request
-  * costs one listing per table it touches, a `listStatus` walk that
-  * forks no process; the parquet read (file index and schema inference,
-  * a Spark job of its own) runs only when that listing differs from the
-  * one the cached frame was read from. Any write changes the listing —
-  * an append adds files, the upsert swap renames in new part files, a
+  * which runs the swap self-heal and then [[graft.Tables.resolve]], the
+  * engine's one resolver: one `listStatus` walk per table a request
+  * touches, and a schema-inference job only when that listing changed.
+  * On top of it the edge keeps one frame per resolved listing, so a warm
+  * request re-analyzes nothing. Any write changes the listing — an
+  * append adds files, the upsert swap renames in new part files, a
   * writer outside this server does the same — so the next request
   * re-reads the table and sees the write, a new schema included.
   * meta_series is a per-listing dimension: its rows are collected to the
@@ -197,41 +197,26 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   // ---------------------------------------------------------------- tables
 
-  /** A resolved table and the file listing it was read from. `rows` is
-    * the table collected to the driver on first use: a dimension small
-    * enough for the edge (meta_series) costs one Spark job per listing,
-    * not one per request. */
-  private final class Resolved(val listing: Seq[(String, Long, Long)], val frame: DataFrame) {
+  /** The edge's frame over one resolved listing. `rows` is the table
+    * collected to the driver on first use: a dimension small enough for
+    * the edge (meta_series) costs one Spark job per listing, not one per
+    * request. */
+  private final class Served(val table: Tables.Resolved, val frame: DataFrame) {
     lazy val rows: Array[Row] = frame.collect()
   }
   // keyed by table path: at most the seven warehouse tables served here
-  private val resolved = new ConcurrentHashMap[String, Resolved]()
+  private val served = new ConcurrentHashMap[String, Served]()
 
   /** The one way a route reads a warehouse table (see class doc). The
     * existence probe runs the warehouse's swap recovery first, so a read
-    * route self-heals an interrupted overwrite like every writer does.
-    * The listing is taken BEFORE the read: a write landing in between
-    * leaves a stored listing older than the frame, which only costs one
-    * extra re-read on the next request, never a stale page. */
-  private def resolve(path: String): Option[Resolved] = {
-    if (!Upsert.tableExists(spark, path)) return None
-    val dir = new Path(path)
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    // a listStatus walk, not listFiles: the local FS builds each
-    // LocatedFileStatus by forking `ls` for the file's permissions
-    val listing = Vector.newBuilder[(String, Long, Long)]
-    def walk(d: Path): Unit = fs.listStatus(d).foreach { f =>
-      if (f.isDirectory) walk(f.getPath)
-      else listing += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    * route self-heals an interrupted overwrite like every writer does. */
+  private def resolve(path: String): Option[Served] =
+    if (!Upsert.tableExists(spark, path)) None
+    else {
+      val t = Tables.resolve(spark, path)
+      Some(served.compute(path, (_, s) =>
+        if (s != null && (s.table eq t)) s else new Served(t, t.read(spark))))
     }
-    walk(dir)
-    val current = listing.result().sorted
-    Option(resolved.get(path)).filter(_.listing == current).orElse {
-      val fresh = new Resolved(current, spark.read.parquet(path))
-      resolved.put(path, fresh)
-      Some(fresh)
-    }
-  }
 
   private def table(path: String): Option[DataFrame] = resolve(path).map(_.frame)
 

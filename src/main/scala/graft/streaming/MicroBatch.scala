@@ -36,6 +36,7 @@ object MicroBatch {
     * shuffle fit executor memory regardless of backlog size. */
   def readEvents(spark: SparkSession, dir: String, schemaFrom: DataFrame,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    // outside Tables.read: a streaming source, its schema given here
     val r = spark.readStream.schema(schemaFrom.schema)
     maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n)).parquet(dir)
   }
@@ -169,7 +170,7 @@ object MicroBatch {
         val merged =
           if (Upsert.tableExists(s, sinkPath))
             Upsert.latestWins(
-              s.read.parquet(sinkPath).unionByName(latest),
+              graft.Tables.read(s, sinkPath).unionByName(latest),
               Seq("user_id"), "ts", tieBreakers = Seq("event_id"))
           else latest
         Upsert.overwriteInPlace(s, sinkPath, merged)
@@ -211,7 +212,7 @@ object MicroBatch {
           // exactly the engine's cold-start rule
           val hw: Option[java.sql.Timestamp] =
             if (Upsert.tableExists(s, sinkPath))
-              Option(s.read.parquet(sinkPath).agg(max(col("ts")))
+              Option(graft.Tables.read(s, sinkPath).agg(max(col("ts")))
                 .head.getTimestamp(0))
             else None
           val lateIf = hw match {

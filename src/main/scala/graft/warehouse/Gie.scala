@@ -232,7 +232,7 @@ object Gie {
         .as("series_id"),
       assetIdOf(col("country")).as("asset_id"),
       col("value"))
-    val delKeys = s.read.parquet(seriesPath(wh))
+    val delKeys = graft.Tables.read(s, seriesPath(wh))
       .filter(col("source") === source).select("series_id")
     Upsert.deleteRefresh(s, dailyPath(wh), delKeys, Seq("series_id"), daily)
   }

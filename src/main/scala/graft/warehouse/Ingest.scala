@@ -107,7 +107,7 @@ object Ingest {
   /** Serving read: the reference client's `get_history` (SURVEY §3.3). */
   def getHistory(spark: SparkSession, wh: Warehouse, seriesId: String,
                  start: String, end: String): DataFrame =
-    spark.read.parquet(wh.observations)
+    graft.Tables.read(spark, wh.observations)
       .filter(col("series_id") === seriesId &&
         col("observation_time").between(lit(start).cast("timestamp"), lit(end).cast("timestamp")))
       .orderBy("observation_time")
@@ -128,7 +128,7 @@ object Ingest {
         .select("dataset_id", "raw_payload"))
     val merged =
       if (Upsert.tableExists(spark, wh.fieldCatalog))
-        FieldDiscovery.merge(spark.read.parquet(wh.fieldCatalog), increment)
+        FieldDiscovery.merge(graft.Tables.read(spark, wh.fieldCatalog), increment)
       else increment
     writeSwap(spark, wh.fieldCatalog, merged)
   }

@@ -58,7 +58,7 @@ object Upsert {
              keys: Seq[String], versionCol: String): Unit = {
     val merged =
       if (tableExists(spark, path)) {
-        val existing = spark.read.parquet(path).withColumn("__src_pri", lit(0))
+        val existing = graft.Tables.read(spark, path).withColumn("__src_pri", lit(0))
         val fresh = incoming.withColumn("__src_pri", lit(1))
         latestWins(existing.unionByName(fresh, allowMissingColumns = true),
           keys, versionCol, tieBreakers = Seq("__src_pri"))
@@ -76,7 +76,7 @@ object Upsert {
     if (!tableExists(spark, path)) {
       deduped.write.mode(SaveMode.Overwrite).parquet(path)
     } else {
-      val existing = spark.read.parquet(path).select(keys.map(col): _*)
+      val existing = graft.Tables.read(spark, path).select(keys.map(col): _*)
       deduped.join(broadcast(existing), keys, "left_anti")
         .write.mode(SaveMode.Append).parquet(path)
     }
@@ -90,7 +90,7 @@ object Upsert {
                     keys: Seq[String], replacement: DataFrame): Unit = {
     val merged =
       if (tableExists(spark, path)) {
-        spark.read.parquet(path)
+        graft.Tables.read(spark, path)
           .join(broadcast(deleteKeys.select(keys.map(col): _*).distinct()),
             keys, "left_anti")
           .unionByName(replacement, allowMissingColumns = true)
@@ -118,15 +118,29 @@ object Upsert {
       staging.toUri, spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
     val backup = new Path(path + ".backup")
-    fs.delete(backup, true)
-    if (fs.exists(dst) && !fs.rename(dst, backup))
-      throw new java.io.IOException(s"overwriteInPlace: rename $dst -> $backup failed")
-    if (!fs.rename(staging, dst)) {
-      if (fs.exists(backup)) fs.rename(backup, dst) // best-effort restore
-      throw new java.io.IOException(s"overwriteInPlace: rename $staging -> $dst failed")
+    withSwapLock(path) {
+      fs.delete(backup, true)
+      if (fs.exists(dst) && !fs.rename(dst, backup))
+        throw new java.io.IOException(s"overwriteInPlace: rename $dst -> $backup failed")
+      if (!fs.rename(staging, dst)) {
+        if (fs.exists(backup)) fs.rename(backup, dst) // best-effort restore
+        throw new java.io.IOException(s"overwriteInPlace: rename $staging -> $dst failed")
+      }
+      fs.delete(backup, true)
     }
-    fs.delete(backup, true)
   }
+
+  private val swapLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The process-local lock on `path`'s swap: [[overwriteInPlace]] holds
+    * it across its two renames, and [[recoverSwap]] takes it before
+    * repairing, so a reader never rolls a live in-process writer's swap
+    * forward between them (the writer's second rename would then fail).
+    * A crashed writer's swap is repaired as before: nothing holds its
+    * lock. */
+  private[graft] def withSwapLock[A](path: String)(body: => A): A =
+    swapLocks.computeIfAbsent(new org.apache.hadoop.fs.Path(path).toString, _ => new Object)
+      .synchronized(body)
 
   /** Complete an interrupted [[overwriteInPlace]] swap (the Stage.ensure
     * crash-consistency contract, applied to the warehouse tables): when
@@ -143,17 +157,22 @@ object Upsert {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
-    if (fs.exists(dst)) return
-    val staging = new Path(path + ".staging")
-    val backup = new Path(path + ".backup")
-    if (fs.exists(new Path(staging, "_SUCCESS"))) {
-      if (!fs.rename(staging, dst))
-        throw new java.io.IOException(s"recoverSwap: rename $staging -> $dst failed")
-      fs.delete(backup, true)
-    } else if (fs.exists(backup)) {
-      if (!fs.rename(backup, dst))
-        throw new java.io.IOException(s"recoverSwap: rename $backup -> $dst failed")
-      fs.delete(staging, true)
+    if (fs.exists(dst)) return // the warm path takes no lock
+    withSwapLock(path) {
+      // re-check: an in-process writer may have just finished its swap
+      if (!fs.exists(dst)) {
+        val staging = new Path(path + ".staging")
+        val backup = new Path(path + ".backup")
+        if (fs.exists(new Path(staging, "_SUCCESS"))) {
+          if (!fs.rename(staging, dst))
+            throw new java.io.IOException(s"recoverSwap: rename $staging -> $dst failed")
+          fs.delete(backup, true)
+        } else if (fs.exists(backup)) {
+          if (!fs.rename(backup, dst))
+            throw new java.io.IOException(s"recoverSwap: rename $backup -> $dst failed")
+          fs.delete(staging, true)
+        }
+      }
     }
   }
 

@@ -732,6 +732,39 @@ class QueryServerSpec extends SparkSpec {
     }
   }
 
+  test("swap lock: a read waits for a live writer's swap and never rolls it forward") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import org.apache.hadoop.fs.Path
+    withServer { (srv, wh) =>
+      ingestGas(srv, "2024-01-01", "2024-01-02")
+      val q = s"${srv.url}/v2/data?series_id=NG_GAS_QUALITY_STFERGUS_WOBBE&limit=1"
+      val valueOf = (body: String) =>
+        "\"value\":([^,]+),".r.findFirstMatchIn(body).get.group(1).toDouble
+      val first = valueOf(http("GET", q)._2)
+      // the writer's new table, staged the way overwriteInPlace stages it
+      val (dst, staging, backup) = (new Path(wh.observations),
+        new Path(wh.observations + ".staging"), new Path(wh.observations + ".backup"))
+      spark.read.parquet(wh.observations).withColumn("value", col("value") + 1000)
+        .localCheckpoint().write.parquet(staging.toString)
+      val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val read = Upsert.withSwapLock(wh.observations) {
+        // the writer, paused between its two renames
+        assert(fs.rename(dst, backup))
+        val read = Future(http("GET", q))
+        Thread.sleep(1500)
+        assert(!read.isCompleted, "the read did not wait for the writer's swap")
+        assert(fs.exists(staging) && !fs.exists(dst), "the read rolled the swap forward")
+        assert(fs.rename(staging, dst))
+        fs.delete(backup, true)
+        read
+      }
+      val (st, body) = Await.result(read, 2.minutes)
+      assert(st === 200 && valueOf(body) === first + 1000, body)
+    }
+  }
+
   test("table resolver: a repeated /v2/data request skips both table reads") {
     // the first request over a fresh server reads observations and
     // meta_series (each read runs a schema-inference job) and collects
