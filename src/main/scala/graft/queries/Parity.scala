@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.sources.{Exports, JsonIngest}
+import graft.streaming.MicroBatch
 import graft.warehouse.Normalize
 
 /** Driver-verified entries for the SURVEY §2 operators that round 2 left
@@ -24,38 +25,6 @@ import graft.warehouse.Normalize
   * doubles rely on Java's round-trip `Double.toString`.
   */
 object Parity {
-
-  /** Run `body` (a streaming drain) on a CLONED session —
-    * `SparkSession.newSession()`: isolated SQLConf + temp catalog over
-    * the same SparkContext — with `spark.sql.shuffle.partitions` set to
-    * `n` on the clone only. A stream's STATE partition count is captured
-    * from this conf at first start and recorded in the checkpoint — it
-    * should match the stream's keyed throughput, not the batch default:
-    * these drains carry kilobytes of state per batch, and each state
-    * partition costs per-batch store init + commit files (measured: the
-    * windowed drain is ~2.2× slower at 32 state partitions than at 8 on
-    * identical data). At production scale the same knob goes UP with key
-    * cardinality. The clone makes the scoping airtight even under
-    * concurrent query execution — nothing session-global is ever
-    * mutated, so a parallel batch plan can't observe n=8 or a stale
-    * restore. Builder-set session options (UTC, nanosAsLong) carry into
-    * the clone via initialSessionOptions; engine function registrations
-    * do NOT (per-session registry), so the helper re-registers them.
-    * Memory-sink tables land in the CLONE's temp catalog — the body
-    * must read them off the clone and return the result.
-    */
-  private def withStreamSession[T](s: SparkSession, n: Int)(body: SparkSession => T): T = {
-    val ss = s.newSession()
-    // SPARK_GRAFT_STREAM_SHUFFLE overrides the per-drain state
-    // partition count for stress/sensitivity rehearsals (the streaming
-    // analogue of SPARK_GRAFT_SHUFFLE_PARTITIONS); unset -> the
-    // call-site default, so the driver's bench is unaffected.
-    val eff = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .map(_.toInt).getOrElse(n)
-    ss.conf.set("spark.sql.shuffle.partitions", eff.toString)
-    Tables.registerFunctions(ss)
-    body(ss)
-  }
 
   // --- q_s1_chunked_rest ----------------------------------------------------
   // SURVEY §2.1 S1 as a DataSource V2 scan: one InputPartition per 2-day
@@ -85,24 +54,13 @@ object Parity {
   // batch q_s1_chunked_rest. coalesce=True (missed ticks merge) IS
   // AvailableNow catch-up from the checkpointed offset;
   // RestPollStreamSpec drives the checkpoint-restart resume.
-  def streamingRestPoll(s: SparkSession, d: String): DataFrame = {
-    val root = tmpRoot("stream", d)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_rp_$runId"
-    withStreamSession(s, 8) { ss =>
-      val q = ss.readStream.format("graft.sources.v2.ChunkedRestSource")
+  def streamingRestPoll(s: SparkSession, d: String): DataFrame =
+    MicroBatch.drainToMemory(s, tmpRoot("stream", d)) { ss =>
+      ss.readStream.format("graft.sources.v2.ChunkedRestSource")
         .option("from", S1From).option("to", S1To)
         .option("chunkDays", "2").option("maxDaysPerBatch", "7")
         .load()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_rp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
     }.orderBy("obs_time", "site", "metric")
-  }
 
   // --- q_st_rest_ingest -------------------------------------------------------
   // THE SCHEDULER LOOP END-TO-END: [[graft.streaming.Scheduler]]'s
@@ -114,20 +72,25 @@ object Parity {
   // time format — so the hash verifies the whole path: stream offsets,
   // batch pivot, registration, normalization and upsert idempotence
   // (a replayed batch that double-wrote would change row counts).
-  // Fresh warehouse + checkpoint per call: replays must recompute.
+  // Fresh warehouse + checkpoint per call: replays must recompute. The
+  // run root is consumed once the result is materialized, and deleted
+  // (the ingestE2e cleanup discipline: a warehouse per bench pass would
+  // accrete otherwise).
   def streamingRestIngest(s: SparkSession, d: String): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val root = s"${tmpRoot("stream", d)}/rest_ingest_$runId"
-    withStreamSession(s, 8) { ss =>
+    val out = MicroBatch.withStreamSession(s) { ss =>
       val wh = graft.warehouse.Ingest.Warehouse(s"$root/wh")
-      val q = graft.streaming.Scheduler.gasIngestStream(
+      graft.streaming.Scheduler.gasIngestStream(
         ss, wh, S1From, S1To, s"$root/cp",
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        maxDaysPerBatch = 7)
-      q.awaitTermination()
+        maxDaysPerBatch = 7).awaitTermination()
       Tables.read(ss, wh.observations)
         .select("series_id", "observation_time", "value", "quality_flag")
-    }.orderBy("series_id", "observation_time")
+        .localCheckpoint()
+    }
+    deleteRunRoot(s, root)
+    out.orderBy("series_id", "observation_time")
   }
 
   lazy val streamingRestIngestSql: String = {
@@ -238,7 +201,7 @@ object Parity {
     if (shm.isDirectory && shm.canWrite) shm.getPath
     else sys.props("java.io.tmpdir")
   }
-  private def tmpRoot(kind: String, d: String): String =
+  private[graft] def tmpRoot(kind: String, d: String): String =
     s"$scratchBase/graft_${kind}_${Tables.stageTag(d)}"
 
   /** Land `df` at `dir` once per tmp lifetime: _SUCCESS marks a complete
@@ -246,6 +209,26 @@ object Parity {
     * the write. Atomic via [[graft.Stage]] (temp-write + rename). */
   private def landOnce(df: DataFrame, dir: String): Unit =
     graft.Stage.ensure(dir) { tmp => df.write.parquet(tmp) }
+
+  /** Land the events table once under `kind`'s root and drain `plan`
+    * through [[MicroBatch.drainToMemory]]. Each `events()` call opens
+    * its own file source over the landing, so a stream-stream join still
+    * reads each side from its own source. */
+  private def drainEvents(s: SparkSession, d: String, kind: String = "stream")
+                         (plan: (() => DataFrame) => DataFrame): DataFrame = {
+    val ev = Tables.events(s, d)
+    val root = tmpRoot(kind, d)
+    landOnce(ev, s"$root/src")
+    MicroBatch.drainToMemory(s, root) { ss =>
+      plan(() => MicroBatch.readEvents(ss, s"$root/src", ev))
+    }
+  }
+
+  /** Delete a consumed run-scoped directory tree. */
+  private def deleteRunRoot(s: SparkSession, root: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  }
 
   private def exportDir(d: String, kind: String): String =
     tmpRoot(s"export_$kind", d)
@@ -553,26 +536,9 @@ object Parity {
   // (max event time minus the 30-minute delay, millisecond precision) —
   // the oracle applies the same closure rule, so the hash verifies both
   // the aggregation AND the watermark semantics.
-  def streamingWindowed(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    // fresh checkpoint + sink name per call: replays must recompute, not
-    // resume (the DATA is deterministic; the run id is not)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_wc_$runId"
-    withStreamSession(s, 8) { ss =>
-      val q = graft.streaming.MicroBatch.windowedCounts(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }.orderBy("window_start", "event_type")
-  }
+  def streamingWindowed(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d)(events => MicroBatch.windowedCounts(events()))
+      .orderBy("window_start", "event_type")
 
   val streamingWindowedSql: String =
     """WITH agg AS (
@@ -598,24 +564,9 @@ object Parity {
   // peak_bucket needs the bucket substructure — a flat hour aggregate
   // cannot produce it — so the hash verifies the CHAIN, not just the
   // outer rollup.
-  def streamingChained(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_ch_$runId"
-    withStreamSession(s, 8) { ss =>
-      val q = graft.streaming.MicroBatch.chainedWindows(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }.orderBy("hour_start", "event_type")
-  }
+  def streamingChained(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d)(events => MicroBatch.chainedWindows(events()))
+      .orderBy("hour_start", "event_type")
 
   val streamingChainedSql: String =
     """WITH b AS (
@@ -673,27 +624,12 @@ object Parity {
   // itself is exactly the batch DISTINCT — so projecting to the keys
   // gives a hash-exact oracle that still exercises the streaming state
   // store, watermark eviction, and AvailableNow drain end to end.
-  def streamingDedup(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_dd_$runId"
-    withStreamSession(s, 8) { ss =>
-      val q = graft.streaming.MicroBatch.dedupWithinWatermark(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .select("user_id", "event_type", "ts")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+  def streamingDedup(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d) { events =>
+      MicroBatch.dedupWithinWatermark(events()).select("user_id", "event_type", "ts")
     }
       .distinct() // watermark eviction may re-admit a key across batches
       .orderBy("user_id", "event_type", "ts")
-  }
 
   val streamingDedupSql: String =
     """SELECT DISTINCT user_id, event_type, ts
@@ -716,35 +652,30 @@ object Parity {
   // recomputes the identical 16-permutation signature with list HOFs and
   // takes DISTINCT. Event time derives deterministically from doc_id
   // (one doc per second from a fixed epoch).
-  def streamingNeardup(s: SparkSession, d: String): DataFrame = {
+  def streamingNeardup(s: SparkSession, d: String): DataFrame =
+    // Null signatures (no complete 3-shingle) ride THROUGH the drain as
+    // one extra key and are dropped batch-side below: a stream-side
+    // filter would add a second evaluation of the signature.
+    drainDocSigs(s, d)(sigs => MicroBatch.neardupWithinWatermark(sigs).select("sig"))
+      .filter(col("sig").isNotNull)
+      .distinct() // watermark eviction may re-admit a signature across batches
+      .orderBy("sig")
+
+  /** Land the documents once and drain `plan` over a stream of (doc_id,
+    * sig, ts): the signature is ONE fused codegen pass per row
+    * (graft.functions.MinhashSig), event time one doc per second from a
+    * fixed epoch. Both near-dup drains share this backlog. */
+  private def drainDocSigs(s: SparkSession, d: String)
+                          (plan: DataFrame => DataFrame): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val root = tmpRoot("stream_nd", d)
     landOnce(docs, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_nd_$runId"
-    withStreamSession(s, 8) { ss =>
-      // ONE fused codegen pass per row (graft.functions.MinhashSig) —
-      // the earlier two-projection HOF split is retired. Null
-      // signatures (no complete 3-shingle) ride THROUGH the drain as
-      // one extra key and are dropped batch-side below: a stream-side
-      // filter would add a second evaluation of the signature.
-      val stream = graft.streaming.MicroBatch.readEvents(ss, s"$root/src", docs)
+    MicroBatch.drainToMemory(s, root) { ss =>
+      plan(MicroBatch.readEvents(ss, s"$root/src", docs)
         .select(col("doc_id"),
           graft.queries.Dedup.minhashSigCol(col("text")).as("sig"),
-          timestamp_micros(col("doc_id") * 1000000L + lit(1704067200000000L)).as("ts"))
-      val q = graft.streaming.MicroBatch.neardupWithinWatermark(stream)
-        .select("sig")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+          timestamp_micros(col("doc_id") * 1000000L + lit(1704067200000000L)).as("ts")))
     }
-      .filter(col("sig").isNotNull) // docs with no complete 3-shingle
-      .distinct() // watermark eviction may re-admit a signature across batches
-      .orderBy("sig")
   }
 
   val streamingNeardupSql: String =
@@ -771,37 +702,16 @@ object Parity {
   // StreamingSpec additionally proves the TTL path: an expired
   // signature is re-admitted after its horizon, an in-horizon one is
   // suppressed, across a checkpointed 2-tick RocksDB drain.
-  def streamingNeardupV2(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val root = tmpRoot("stream_nd", d) // shares v1's landed backlog
-    landOnce(docs, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_nd2_$runId"
-    withStreamSession(s, 8) { ss =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val stream = graft.streaming.MicroBatch.readEvents(ss, s"$root/src", docs)
-        .select(col("doc_id"),
-          graft.queries.Dedup.minhashSigCol(col("text")).as("sig"),
-          timestamp_micros(col("doc_id") * 1000000L + lit(1704067200000000L)).as("ts"))
-      // ProcessingTime mode (required by the state TTL) schedules a
-      // follow-up batch after every batch, so AvailableNow would loop
-      // empty micro-batches forever; MicroBatch.drainAvailable bounds
-      // the drain at the first committed zero-input batch.
-      val q = graft.streaming.MicroBatch
-        .neardupV2(stream, java.time.Duration.ofHours(24))
+  def streamingNeardupV2(s: SparkSession, d: String): DataFrame =
+    // processing-time state TTL: MicroBatch.drainToMemory bounds the
+    // drain with drainAvailable instead of AvailableNow
+    drainDocSigs(s, d) { sigs =>
+      MicroBatch.neardupV2(sigs, java.time.Duration.ofHours(24))
         .toDF("sig", "doc_id")
         .select("sig")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp2_$runId")
-        .start()
-      graft.streaming.MicroBatch.drainAvailable(q)
-      ss.table(name)
     }
       .distinct() // one emit per sig per drain by construction; defensive
       .orderBy("sig")
-  }
 
   // --- q_st_pattern ---------------------------------------------------------
   // STREAMING CEP: the stateful twin of the batch q_ev_pattern window
@@ -816,26 +726,9 @@ object Parity {
   // admitted ts − 1 h, so the emit/withhold boundary is the same
   // exact-integer comparison on both sides (StreamingSpec pins the
   // boundary semantics with constructed ±1 ms cases).
-  def streamingPattern(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d) // shares the landed events backlog
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_cep_$runId"
-    withStreamSession(s, 8) { ss =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = graft.streaming.MicroBatch.patternV2(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }.orderBy("user_id", "view_id")
-  }
+  def streamingPattern(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d)(events => MicroBatch.patternV2(events()).toDF())
+      .orderBy("user_id", "view_id")
 
   val streamingPatternSql: String =
     """WITH e AS MATERIALIZED (
@@ -890,8 +783,8 @@ object Parity {
     // checkpoint finds zero new files and the sink is already correct.
     // This is the real resume semantics, and it keeps repeat bench/
     // verify runs from accreting full-corpus copies under /tmp.
-    withStreamSession(s, 8) { ss =>
-      graft.streaming.MicroBatch.drainOnce(ss, s"$root/src", s"$root/cp_up",
+    MicroBatch.withStreamSession(s) { ss =>
+      MicroBatch.drainOnce(ss, s"$root/src", s"$root/cp_up",
         s"$root/sink_up", ev)
     }
     Tables.read(s, s"$root/sink_up")
@@ -915,8 +808,8 @@ object Parity {
     val ev = Tables.events(s, d)
     val root = tmpRoot("stream", d)
     landOnce(ev, s"$root/src")
-    withStreamSession(s, 8) { ss =>
-      graft.streaming.MicroBatch.drainDyadicTree(ss, s"$root/src",
+    MicroBatch.withStreamSession(s) { ss =>
+      MicroBatch.drainDyadicTree(ss, s"$root/src",
         s"$root/cp_dy", s"$root/sink_dy", ev, maxFilesPerTrigger = Some(2))
     }
     Tables.read(s, s"$root/sink_dy")
@@ -948,8 +841,8 @@ object Parity {
     val ev = Tables.events(s, d)
     val root = tmpRoot("stream", d)
     landOnce(ev, s"$root/src")
-    withStreamSession(s, 8) { ss =>
-      graft.streaming.MicroBatch.drainCdc(ss, s"$root/src", s"$root/cp_cdc",
+    MicroBatch.withStreamSession(s) { ss =>
+      MicroBatch.drainCdc(ss, s"$root/src", s"$root/cp_cdc",
         s"$root/sink_cdc", ev)
     }
     Tables.read(s, s"$root/sink_cdc")
@@ -978,25 +871,11 @@ object Parity {
   // the watermark and the emitted inner-join rows are exactly the batch
   // interval join — the oracle. The watermark + range condition still
   // exercise the state-eviction machinery end to end.
-  def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_sj_$runId"
-    withStreamSession(s, 8) { ss =>
-      def side(t: String) = graft.streaming.MicroBatch
-        .readEvents(ss, s"$root/src", ev).filter(col("event_type") === t)
-      val q = graft.streaming.MicroBatch.intervalJoin(side("view"), side("click"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+  def streamStreamJoin(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d) { events =>
+      def side(t: String) = events().filter(col("event_type") === t)
+      MicroBatch.intervalJoin(side("view"), side("click"))
     }.orderBy("view_id", "click_id")
-  }
 
   val streamStreamJoinSql: String =
     """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
@@ -1017,25 +896,11 @@ object Parity {
   // which is the semantic (and state-size) difference from the inner
   // join the oracle pins: a duplicate view row or a per-click
   // multiplication breaks the hash.
-  def streamSemiJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_ssj_$runId"
-    withStreamSession(s, 8) { ss =>
-      def side(t: String) = graft.streaming.MicroBatch
-        .readEvents(ss, s"$root/src", ev).filter(col("event_type") === t)
-      val q = graft.streaming.MicroBatch.intervalJoinSemi(side("view"), side("click"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+  def streamSemiJoin(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d) { events =>
+      def side(t: String) = events().filter(col("event_type") === t)
+      MicroBatch.intervalJoinSemi(side("view"), side("click"))
     }.orderBy("view_id")
-  }
 
   val streamSemiJoinSql: String =
     """SELECT v.user_id, v.event_id AS view_id, v.ts AS view_ts
@@ -1060,29 +925,14 @@ object Parity {
   // oracle replays exactly that cutoff: inner matches unconditionally
   // (single-data-batch drain), null rows only where
   // view_ts + 6h < min(max view, max click) - 1h.
-  def streamOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_oj_$runId"
-    withStreamSession(s, 8) { ss =>
-      def side(t: String) = graft.streaming.MicroBatch
-        .readEvents(ss, s"$root/src", ev).filter(col("event_type") === t)
-      val q = graft.streaming.MicroBatch
-        .intervalJoin(side("view"), side("click"), joinType = "left_outer")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+  def streamOuterJoin(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d) { events =>
+      def side(t: String) = events().filter(col("event_type") === t)
+      MicroBatch.intervalJoin(side("view"), side("click"), joinType = "left_outer")
     }
       // explicit NULLS FIRST: Spark's default ASC null ordering, pinned in
       // the oracle too (DuckDB defaults to NULLS LAST)
       .orderBy(col("view_id"), col("click_id").asc_nulls_first)
-  }
 
   val streamOuterJoinSql: String =
     """WITH v AS (
@@ -1166,27 +1016,12 @@ object Parity {
   // view_ts + 6h < wm, a click at click_ts < wm (its candidate views
   // all have view_ts ≤ click_ts). The oracle models both rules off the
   // same global watermark (min of the two sides' max − 1h).
-  def streamFullOuter(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_fo_$runId"
-    withStreamSession(s, 8) { ss =>
-      def side(t: String) = graft.streaming.MicroBatch
-        .readEvents(ss, s"$root/src", ev).filter(col("event_type") === t)
-      val q = graft.streaming.MicroBatch
-        .intervalJoinFull(side("view"), side("click"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
+  def streamFullOuter(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d) { events =>
+      def side(t: String) = events().filter(col("event_type") === t)
+      MicroBatch.intervalJoinFull(side("view"), side("click"))
     }
       .orderBy(col("view_id").asc_nulls_first, col("click_id").asc_nulls_first)
-  }
 
   val streamFullOuterSql: String =
     """WITH v AS (
@@ -2127,25 +1962,12 @@ object Parity {
   // reproduces. Stateless per batch — no watermark, no state store; the
   // dim broadcasts under each micro-batch's plan.
   def streamStaticJoin(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream", d)
-    landOnce(ev, s"$root/src")
-    val dim = ev.select(col("user_id")).distinct()
+    val dim = Tables.events(s, d).select(col("user_id")).distinct()
       .withColumn("tier", col("user_id") % 5)
       .filter(col("tier") =!= 4)
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_stream_en_$runId"
-    withStreamSession(s, 8) { ss =>
-      val q = graft.streaming.MicroBatch.enrich(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev), dim, "user_id")
+    drainEvents(s, d) { events =>
+      MicroBatch.enrich(events(), dim, "user_id")
         .select("event_id", "user_id", "event_type", "tier")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
     }.orderBy("event_id")
   }
 
@@ -2167,7 +1989,7 @@ object Parity {
   // IEEE value. StreamingSpec separately holds the streaming path equal
   // to this batch twin, so the green row covers both execution modes.
   def anomalyBatch(s: SparkSession, d: String): DataFrame =
-    graft.streaming.MicroBatch.anomalies(Tables.events(s, d))
+    MicroBatch.anomalies(Tables.events(s, d))
       .toDF()
       .orderBy("user_id", "ts", "value")
 
@@ -2197,26 +2019,9 @@ object Parity {
   // and the (ts, value) in-batch sort makes the emitted set deterministic
   // — hash-equal to the same DuckDB window-replay oracle as q_st_anomaly,
   // pinning both state APIs to the same exact-cents semantics.
-  def anomalyBatchV2(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream_tws", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_tws_$runId"
-    withStreamSession(s, 8) { ss =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = graft.streaming.MicroBatch.anomaliesV2(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }.orderBy("user_id", "ts", "value")
-  }
+  def anomalyBatchV2(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d, "stream_tws")(events => MicroBatch.anomaliesV2(events()).toDF())
+      .orderBy("user_id", "ts", "value")
 
   // --- q_st_rolling_v2 ------------------------------------------------------
   // Trailing-window statistics (count / max / exact-cents sum over the
@@ -2228,26 +2033,9 @@ object Parity {
   // per-element list layout exists for. Same RocksDB AvailableNow
   // drain as the anomaly row; the oracle is the batch window
   // ROWS BETWEEN 2 PRECEDING AND CURRENT ROW over (ts, value) order.
-  def rollingBatchV2(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream_roll", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_roll_$runId"
-    withStreamSession(s, 8) { ss =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = graft.streaming.MicroBatch.rollingV2(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }.orderBy("user_id", "ts", "value")
-  }
+  def rollingBatchV2(s: SparkSession, d: String): DataFrame =
+    drainEvents(s, d, "stream_roll")(events => MicroBatch.rollingV2(events()).toDF())
+      .orderBy("user_id", "ts", "value")
 
   val rollingBatchSql: String =
     """SELECT user_id, ts, value,
@@ -2370,24 +2158,7 @@ object Parity {
   // to the batch window top-5 regardless of how the backlog was sliced
   // into micro-batches (StreamingSpec pins the 2-tick slicing).
   def streamingLeaderboard(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d)
-    val root = tmpRoot("stream_lead", d)
-    landOnce(ev, s"$root/src")
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"graft_lead_$runId"
-    val out = withStreamSession(s, 8) { ss =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = graft.streaming.MicroBatch.leaderboard(
-        graft.streaming.MicroBatch.readEvents(ss, s"$root/src", ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", s"$root/cp_$runId")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(name)
-    }
+    val out = drainEvents(s, d, "stream_lead")(events => MicroBatch.leaderboard(events()).toDF())
     // "board now" = rows at each key's max revision; a window avoids
     // the self-join against the memory sink's view
     val wl = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
@@ -2494,9 +2265,7 @@ object Parity {
     // the run-scoped warehouse is consumed — reclaim it now that the
     // result is materialized (a full-corpus warehouse per bench pass
     // would accrete under /tmp otherwise)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    deleteRunRoot(s, root)
     out.orderBy("series_id", "observation_time")
   }
 
@@ -2582,9 +2351,7 @@ object Parity {
       .select("series_id", "observation_time", "value", "quality_flag")
     val meta = Tables.read(s, wh.metaSeries).select("series_id", "description")
     val out = obs.join(meta, "series_id").localCheckpoint()
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    deleteRunRoot(s, root)
     out.orderBy("series_id", "observation_time")
   }
 

@@ -718,7 +718,7 @@ object Relational {
   /** Run `f` with `confs` set, restoring prior values after. Mutate-
     * restore is safe only under the driver's SEQUENTIAL execution; it
     * survives here (unlike the streaming drains, which run on a cloned
-    * session — `Parity.withStreamSession`) because AQE reads these confs
+    * session — `MicroBatch.withStreamSession`) because AQE reads these confs
     * at EXECUTION time on the session the plan was built against, so the
     * execute-inside-window call sites would otherwise have to rebuild
     * their plans on a clone. If concurrent execution is ever added, do

@@ -25,6 +25,23 @@ import graft.warehouse.Upsert
   * At scale the source is a stream of landed files (or Kafka); state and
   * sink merges shard on the upsert key, so 1000 executors each hold
   * 1/1000th of the watermark window — no single-node state bottleneck.
+  *
+  * Every drain the engine runs starts and stops here (only the
+  * long-running [[Scheduler.gasIngestStream]] returns a live query):
+  *  - [[drainToMemory]] runs a stream plan into a memory sink on a
+  *    cloned session ([[withStreamSession]]) and returns the sink's
+  *    table. Two settings are derived from the plan, never passed: a
+  *    `transformWithState` node switches the clone to the RocksDB state
+  *    store, the only store that operator supports; and one in
+  *    processing-time mode (state TTL) runs on the default trigger,
+  *    bounded by [[drainAvailable]], because under AvailableNow it
+  *    schedules empty batches forever. The run-scoped checkpoint is
+  *    deleted once the query has terminated: a memory sink cannot
+  *    resume from a checkpoint, so nothing could ever read it again.
+  *  - the foreachBatch drains ([[drainOnce]], [[drainDyadicTree]],
+  *    [[drainCdc]], [[drainWithLateQuarantine]]) keep their checkpoint —
+  *    their sinks are durable and a repeat run is the next tick — and
+  *    share one start/await body that reports [[DrainStats]].
   */
 object MicroBatch {
 
@@ -73,34 +90,83 @@ object MicroBatch {
     * ([[drainWithLateQuarantine]]) or a wider horizon picks it up. */
   case class DrainStats(batches: Int, droppedByWatermark: Long)
 
-  /** Run one AvailableNow drain: read → dedup → foreachBatch upsert into
-    * the parquet table at `sinkPath`. Returns after the backlog is fully
-    * processed (awaitTermination), like one scheduler tick.
+  /** State partitions of a drain's cloned session. A stream's state
+    * partition count is captured from `spark.sql.shuffle.partitions` at
+    * first start and recorded in the checkpoint, so it should match the
+    * stream's keyed throughput, not the batch default: these drains
+    * carry kilobytes of state per batch, and each state partition costs
+    * per-batch store init + commit files (measured: the windowed drain
+    * is ~2.2× slower at 32 state partitions than at 8 on identical
+    * data). At production scale it goes UP with key cardinality. */
+  private val StreamStatePartitions = 8
+
+  /** Run `body` (a streaming drain) on a CLONED session —
+    * `SparkSession.newSession()`: isolated SQLConf + temp catalog over
+    * the same SparkContext — with [[StreamStatePartitions]] shuffle
+    * partitions on the clone only. The clone makes the scoping airtight
+    * even under concurrent query execution — nothing session-global is
+    * ever mutated, so a parallel batch plan can't observe the drain's
+    * settings or a stale restore. Builder-set session options (UTC,
+    * nanosAsLong) carry into the clone via initialSessionOptions; engine
+    * function registrations do NOT (per-session registry), so the helper
+    * re-registers them. Memory-sink tables land in the CLONE's temp
+    * catalog — the body must read them off the clone and return the
+    * result.
     */
-  def drainOnce(spark: SparkSession, sourceDir: String, checkpoint: String,
-                sinkPath: String, schemaFrom: DataFrame,
-                maxFilesPerTrigger: Option[Int] = None): Unit = {
-    drainOnceObserved(spark, sourceDir, checkpoint, sinkPath, schemaFrom,
-      maxFilesPerTrigger)
-    ()
+  def withStreamSession[T](s: SparkSession)(body: SparkSession => T): T = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions.toString)
+    graft.Tables.registerFunctions(ss)
+    body(ss)
   }
 
-  /** [[drainOnce]] with the per-batch drop telemetry surfaced. */
-  def drainOnceObserved(spark: SparkSession, sourceDir: String,
-                        checkpoint: String, sinkPath: String,
-                        schemaFrom: DataFrame,
-                        maxFilesPerTrigger: Option[Int] = None): DrainStats = {
-    val q: StreamingQuery = dedupWithinWatermark(
-      readEvents(spark, sourceDir, schemaFrom, maxFilesPerTrigger))
-      .withColumn("ingestion_time", current_timestamp())
-      .writeStream
+  /** Drain the stream `plan` builds on a cloned session into a memory
+    * sink, like one scheduler tick, and return the sink's table. A fresh
+    * run id names the sink and the checkpoint `root/cp_<run>`, so a
+    * repeat call recomputes instead of resuming (the data is
+    * deterministic, the run id is not). `plan` receives the clone and
+    * opens its own sources there — a stream-stream join reads each side
+    * from its own source. The state store and the trigger are derived
+    * from the plan (see the object doc); the checkpoint is deleted once
+    * the query has terminated. */
+  def drainToMemory(s: SparkSession, root: String)
+                   (plan: SparkSession => DataFrame): DataFrame =
+    withStreamSession(s) { ss =>
+      import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+      import org.apache.spark.sql.streaming.TimeMode
+      val runId = java.util.UUID.randomUUID().toString.replace("-", "")
+      val name = s"graft_drain_$runId"
+      val checkpoint = s"$root/cp_$runId"
+      val stream = plan(ss)
+      val timeModes = stream.queryExecution.logical.collect {
+        case t: TransformWithState => t.timeMode
+      }
+      if (timeModes.nonEmpty)
+        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      val processingTime = timeModes.contains(TimeMode.ProcessingTime())
+      val w = stream.writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", checkpoint)
+      val q = (if (processingTime) w else w.trigger(Trigger.AvailableNow())).start()
+      try {
+        if (processingTime) drainAvailable(q) else q.awaitTermination()
+      } finally {
+        if (q.isActive) q.stop() // interrupted; a finished query needs no stop
+        val p = new org.apache.hadoop.fs.Path(checkpoint)
+        p.getFileSystem(ss.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+      ss.table(name)
+    }
+
+  /** The one start/await body of the foreachBatch drains: AvailableNow
+    * over `stream`, each micro-batch handed to `sink` with its id. */
+  private def drainBatches(stream: DataFrame, checkpoint: String)
+                          (sink: (DataFrame, Long) => Unit): DrainStats = {
+    val q = stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.upsert(spark, sinkPath, batch,
-          keys = Seq("user_id", "event_type", "ts"),
-          versionCol = "ingestion_time")
-      }
+      .foreachBatch(sink)
       .start()
     q.awaitTermination()
     val progress = q.recentProgress
@@ -108,6 +174,22 @@ object MicroBatch {
       progress.iterator.flatMap(_.stateOperators.iterator)
         .map(_.numRowsDroppedByWatermark).sum)
   }
+
+  /** Run one AvailableNow drain: read → dedup → foreachBatch upsert into
+    * the parquet table at `sinkPath`. Returns after the backlog is fully
+    * processed (awaitTermination), like one scheduler tick, with the
+    * per-batch drop telemetry.
+    */
+  def drainOnce(spark: SparkSession, sourceDir: String, checkpoint: String,
+                sinkPath: String, schemaFrom: DataFrame,
+                maxFilesPerTrigger: Option[Int] = None): DrainStats =
+    drainBatches(dedupWithinWatermark(
+      readEvents(spark, sourceDir, schemaFrom, maxFilesPerTrigger))
+      .withColumn("ingestion_time", current_timestamp()), checkpoint) { (batch, _) =>
+      Upsert.upsert(spark, sinkPath, batch,
+        keys = Seq("user_id", "event_type", "ts"),
+        versionCol = "ingestion_time")
+    }
 
   /** Streaming build of the dyadic counter tree — the mergeable-sketch
     * claim exercised LIVE: each micro-batch aggregates its OWN partial
@@ -123,20 +205,13 @@ object MicroBatch {
   def drainDyadicTree(spark: SparkSession, sourceDir: String,
                       checkpoint: String, sinkPath: String,
                       schemaFrom: DataFrame,
-                      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val q: StreamingQuery = readEvents(spark, sourceDir, schemaFrom,
-      maxFilesPerTrigger)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.queries.Analytics.dyadicTree(batch)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch_id=$id")
-      }
-      .start()
-    q.awaitTermination()
-  }
+                      maxFilesPerTrigger: Option[Int] = None): DrainStats =
+    drainBatches(readEvents(spark, sourceDir, schemaFrom, maxFilesPerTrigger),
+      checkpoint) { (batch, id) =>
+      graft.queries.Analytics.dyadicTree(batch)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$sinkPath/batch_id=$id")
+    }
 
   /** Streaming CDC APPLY — the incremental form of the batch op-log
     * apply (q_w11): each micro-batch carries upserts and deletes keyed
@@ -154,30 +229,23 @@ object MicroBatch {
     * `op <> 'D'`; tombstone GC past a compaction horizon is the
     * layout-side concern (q_ly_compacted_scan's machinery). */
   def drainCdc(spark: SparkSession, sourceDir: String, checkpoint: String,
-               sinkPath: String, schemaFrom: DataFrame): Unit = {
-    val q: StreamingQuery = readEvents(spark, sourceDir, schemaFrom)
+               sinkPath: String, schemaFrom: DataFrame): DrainStats =
+    drainBatches(readEvents(spark, sourceDir, schemaFrom)
       .select(col("user_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U"))
           .as("op"),
-        col("ts"), col("event_id"), col("value"))
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val latest = Upsert.latestWins(batch, Seq("user_id"), "ts",
-          tieBreakers = Seq("event_id"))
-        val merged =
-          if (Upsert.tableExists(s, sinkPath))
-            Upsert.latestWins(
-              graft.Tables.read(s, sinkPath).unionByName(latest),
-              Seq("user_id"), "ts", tieBreakers = Seq("event_id"))
-          else latest
-        Upsert.overwriteInPlace(s, sinkPath, merged)
-      }
-      .start()
-    q.awaitTermination()
-  }
+        col("ts"), col("event_id"), col("value")), checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      val latest = Upsert.latestWins(batch, Seq("user_id"), "ts",
+        tieBreakers = Seq("event_id"))
+      val merged =
+        if (Upsert.tableExists(s, sinkPath))
+          Upsert.latestWins(
+            graft.Tables.read(s, sinkPath).unionByName(latest),
+            Seq("user_id"), "ts", tieBreakers = Seq("event_id"))
+        else latest
+      Upsert.overwriteInPlace(s, sinkPath, merged)
+    }
 
   /** The late-data DEAD LETTER drain: no row is silently lost. The
     * stateful dedup path drops sub-watermark rows inside the state
@@ -198,49 +266,41 @@ object MicroBatch {
                               checkpoint: String, sinkPath: String,
                               quarantinePath: String, schemaFrom: DataFrame,
                               horizon: String = "1 hour",
-                              maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val q: StreamingQuery =
-      readEvents(spark, sourceDir, schemaFrom, maxFilesPerTrigger)
-        .withColumn("ingestion_time", current_timestamp())
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          // watermark = horizon behind the committed high-water; absent
-          // sink (first batch) = no watermark yet, nothing is late —
-          // exactly the engine's cold-start rule
-          val hw: Option[java.sql.Timestamp] =
-            if (Upsert.tableExists(s, sinkPath))
-              Option(graft.Tables.read(s, sinkPath).agg(max(col("ts")))
-                .head.getTimestamp(0))
-            else None
-          val lateIf = hw match {
-            case Some(h) => col("ts") < lit(h) - expr(s"INTERVAL $horizon")
-            case None => lit(false)
-          }
-          val tagged = batch.withColumn("__late", lateIf).localCheckpoint()
-          val late = tagged.filter(col("__late")).drop("__late")
-          // foreachBatch is at-least-once: a batch that fails after
-          // this write re-executes with the SAME batchId. Partitioning
-          // by batch_id with dynamic partition overwrite makes the
-          // replay rewrite its own partition instead of appending a
-          // duplicate copy — the quarantine stays exactly-once like
-          // the upsert-protected main sink.
-          if (!late.isEmpty)
-            late.withColumn("batch_id", lit(batchId))
-              .withColumn("watermark_ts", lit(hw.orNull))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(quarantinePath)
-          Upsert.upsert(s, sinkPath, tagged.filter(!col("__late")).drop("__late"),
-            keys = Seq("user_id", "event_type", "ts"),
-            versionCol = "ingestion_time")
-        }
-        .start()
-    q.awaitTermination()
-  }
+                              maxFilesPerTrigger: Option[Int] = None): DrainStats =
+    drainBatches(readEvents(spark, sourceDir, schemaFrom, maxFilesPerTrigger)
+      .withColumn("ingestion_time", current_timestamp()), checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      // watermark = horizon behind the committed high-water; absent
+      // sink (first batch) = no watermark yet, nothing is late —
+      // exactly the engine's cold-start rule
+      val hw: Option[java.sql.Timestamp] =
+        if (Upsert.tableExists(s, sinkPath))
+          Option(graft.Tables.read(s, sinkPath).agg(max(col("ts")))
+            .head.getTimestamp(0))
+        else None
+      val lateIf = hw match {
+        case Some(h) => col("ts") < lit(h) - expr(s"INTERVAL $horizon")
+        case None => lit(false)
+      }
+      val tagged = batch.withColumn("__late", lateIf).localCheckpoint()
+      val late = tagged.filter(col("__late")).drop("__late")
+      // foreachBatch is at-least-once: a batch that fails after
+      // this write re-executes with the SAME batchId. Partitioning
+      // by batch_id with dynamic partition overwrite makes the
+      // replay rewrite its own partition instead of appending a
+      // duplicate copy — the quarantine stays exactly-once like
+      // the upsert-protected main sink.
+      if (!late.isEmpty)
+        late.withColumn("batch_id", lit(batchId))
+          .withColumn("watermark_ts", lit(hw.orNull))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
+          .parquet(quarantinePath)
+      Upsert.upsert(s, sinkPath, tagged.filter(!col("__late")).drop("__late"),
+        keys = Seq("user_id", "event_type", "ts"),
+        versionCol = "ingestion_time")
+    }
 
   /** Windowed streaming aggregation (the serving-side rollup): per
     * 10-minute tumbling window × event_type counts and sums, emitted

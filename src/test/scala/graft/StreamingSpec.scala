@@ -111,12 +111,12 @@ class StreamingSpec extends SparkSpec {
         s"the windowed agg must count the dropped late wave, got $winDropped")
 
       // --- the dedup upsert drain drops them too — same silent loss,
-      // surfaced by drainOnceObserved: the sink ends up MISSING the late
+      // surfaced by drainOnce: the sink ends up MISSING the late
       // rows and the metric is what says so ---
       val src1 = dir("late-src1")
       landWaves(src1)
       val sink1 = dir("late-sink1") + "/obs"
-      val stats = MicroBatch.drainOnceObserved(spark, src1, dir("late-cp1"),
+      val stats = MicroBatch.drainOnce(spark, src1, dir("late-cp1"),
         sink1, events, maxFilesPerTrigger = Some(1))
       assert(stats.batches >= 3)
       assert(stats.droppedByWatermark === 50L,
@@ -1406,6 +1406,38 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(got.map(x => (x._1, x._2, x._3)).subsetOf(batch),
       "every streamed match must be a batch match")
+  }
+
+  /** Run-scoped checkpoints under a drain root: `cp_*` directories. */
+  private def checkpoints(root: String): Set[String] =
+    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("cp_")).map(_.getName).toSet
+
+  test("a memory-sink drain run twice gives equal results and leaves no checkpoint") {
+    val root = graft.queries.Parity.tmpRoot("stream", sf)
+    val before = checkpoints(root)
+    def run() = SparkEntry.queries("q_st_windowed")(spark, sf).collect().toSeq
+    val first = run()
+    val second = run()
+    assert(first.nonEmpty)
+    assert(first === second)
+    val left = checkpoints(root) -- before
+    assert(left.isEmpty, s"drain checkpoints left under $root: ${left.mkString(", ")}")
+  }
+
+  test("drains derive their state store and trigger from the plan") {
+    // transformWithState needs RocksDB; the v2 anomaly drain must equal
+    // its flatMapGroupsWithState batch twin
+    val roots = Seq("stream_tws", "stream_nd").map(graft.queries.Parity.tmpRoot(_, sf))
+    val before = roots.map(checkpoints)
+    def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect().toSeq
+    assert(rows("q_st_anomaly_v2") === rows("q_st_anomaly"))
+    // processing-time TTL never ends under AvailableNow: the v2 near-dup
+    // drain must finish and admit the v1 signature set
+    assert(rows("q_st_neardup_v2") === rows("q_st_neardup"))
+    roots.zip(before).foreach { case (root, b) =>
+      assert((checkpoints(root) -- b).isEmpty, s"checkpoints left under $root")
+    }
   }
 }
 

@@ -30,8 +30,10 @@ the axes get different trust levels:
     time regression:   new > 1.5 x old AND new - old > 0.4 s
                         AND the query's shuffle bytes did NOT regress
 
-  * no RETRY file: time-only trips are QUARANTINED — written to
-    bench_noise.json next to NEW and printed as `noise`; exit 3 means
+  * no RETRY file: time-only trips are QUARANTINED — written to the
+    untracked bench_noise_pending.json next to NEW (the tracked
+    bench_noise.json holds only the hand-written "notes" ledger and is
+    never rewritten) and printed as `noise`; exit 3 means
     "re-measure these, then re-invoke with the retry detail".
     tools/bench_round.py runs the whole loop (full bench → gate →
     cool-down → targeted best-of-3 retry → final gate) in ONE command.
@@ -190,12 +192,9 @@ def main() -> int:
     still_open = noise if retry is None else pending
     if still_open:
         noise_path = os.path.join(
-            os.path.dirname(os.path.abspath(sys.argv[2])), "bench_noise.json")
-        # "notes" is a hand-maintained mechanism ledger (e.g. q_sim_jl's
-        # JIT-ramp root cause) — carry it across rewrites, never drop it
-        notes = (load_json(noise_path, {}) or {}).get("notes", {})
-        json.dump({"queries": still_open, "notes": notes},
-                  open(noise_path, "w"), indent=1)
+            os.path.dirname(os.path.abspath(sys.argv[2])),
+            "bench_noise_pending.json")
+        json.dump({"queries": still_open}, open(noise_path, "w"), indent=1)
         print(f"gate: {len(still_open)} time-only trip(s) quarantined -> "
               f"{noise_path}; re-measure and re-invoke with the retry "
               "detail (exit 3)")

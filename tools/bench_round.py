@@ -106,7 +106,7 @@ def main() -> int:
     if rc != 3:
         return rc
 
-    noise = json.load(open(os.path.join(REPO, "bench_noise.json")))["queries"]
+    noise = json.load(open(os.path.join(REPO, "bench_noise_pending.json")))["queries"]
     print(f"== {len(noise)} time-only trip(s); cool-down {cooldown}s, "
           "then targeted best-of-3 retry")
     time.sleep(cooldown)

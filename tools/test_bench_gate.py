@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Self-test for bench_gate.py's verdict logic — the gate is the round
 snapshot's gatekeeper, so its own behavior is pinned here: fingerprint
-hard-trips, volatile/flips exemptions, time-trip quarantine, the
-missing-retry rule, and retry adjudication annotations.
+hard-trips, volatile/flips exemptions, time-trip quarantine (to an
+untracked file), the missing-retry rule, and retry adjudication
+annotations.
 
 Run: python3 tools/test_bench_gate.py  (exit 0 = all cases pass)
 """
@@ -26,8 +27,8 @@ def detail(queries, shuffle=None, spill=None, fp=None, volatile=None):
     }
 
 
-def run_gate(old, new, retry=None, pins=None):
-    d = tempfile.mkdtemp()
+def run_gate(old, new, retry=None, pins=None, workdir=None):
+    d = workdir or tempfile.mkdtemp()
     po, pn = os.path.join(d, "old.json"), os.path.join(d, "new.json")
     json.dump(old, open(po, "w"))
     json.dump(new, open(pn, "w"))
@@ -107,6 +108,19 @@ def main():
     # time-only trip with flat bytes -> quarantine exit 3
     rc, out = run_gate(detail(base), detail({"q_a": 2.0, "q_b": 2.0}))
     check("time trip quarantined", rc == 3 and "quarantined" in out, out)
+
+    # the quarantine list goes to the untracked bench_noise_pending.json;
+    # the tracked bench_noise.json (the notes ledger) stays byte-identical
+    d = tempfile.mkdtemp()
+    ledger = os.path.join(d, "bench_noise.json")
+    open(ledger, "w").write('{\n "notes": {\n  "q_a": "a hand-written note"\n }\n}')
+    before = open(ledger, "rb").read()
+    rc, out = run_gate(detail(base), detail({"q_a": 2.0, "q_b": 2.0}),
+                       workdir=d)
+    pending = json.load(open(os.path.join(d, "bench_noise_pending.json")))
+    check("trip leaves the tracked ledger untouched",
+          rc == 3 and open(ledger, "rb").read() == before
+          and pending["queries"] == ["q_a"], out)
 
     # shuffle regression -> hard even with flat time
     rc, out = run_gate(detail(base),
