@@ -7,13 +7,40 @@ import org.apache.spark.sql.SparkSession
   * detail is also written to bench_detail.json).
   * local[32] / shuffle.partitions=32 per the driver environment; each
   * query is forced with count() (full execution, no result transfer).
+  * Both lines carry `calib_ms` (see [[calibMs]]) and the `cpus` the
+  * session ran with, so totals from different hosts can be read
+  * against each other.
   * A failed query reports wall time -1.0 and lands in an "errors" map —
   * never a normal-looking timing — and is excluded from the total.
   */
 object Bench {
+  /** Median of five runs of a fixed xorshift loop, in ms — the same loop
+    * as perfbench's `host.calib_ms`. Wall times from two hosts (or two
+    * phases of one shared host) compare only through this figure. */
+  def calibMs(): Double = {
+    val reps = (1 to 5).map { _ =>
+      val t = System.nanoTime()
+      var x = 88172645463325252L
+      var i = 0
+      while (i < 20000000) {
+        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+        i += 1
+      }
+      if (x == 42L) println("")
+      (System.nanoTime() - t) / 1e6
+    }.sorted
+    reps(2)
+  }
+
+  /** Classes Janino has compiled in this JVM so far (one histogram entry
+    * per compile, whoever triggered it). */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val calib = calibMs()
     val spark = Sessions.local(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Shuffle-partition stress rehearsal (SCALE.md): a plan that only
@@ -156,6 +183,12 @@ object Bench {
     }
     val shuffleBytes = scala.collection.mutable.Map[String, Long]()
     val spillBytes = scala.collection.mutable.Map[String, Long]()
+    // Generated classes each query compiled on its LAST pass: after the
+    // warm pass a query whose classes stayed in Spark's codegen cache
+    // compiles 0, so a nonzero count is an evicted cache or a plan that
+    // generates new source per run (JVM-unique names, inlined literals).
+    // A counter read, no job.
+    val compileCounts = scala.collection.mutable.Map[String, Long]()
     // every successful pass's wall time, for the per-query MEAN emitted
     // next to best-of-N in bench_detail.json: with host-variance phases
     // dominating round-over-round deltas, (best, mean) together make a
@@ -182,11 +215,13 @@ object Bench {
       val shuffle0 = shuffleAcc.get()
       val spill0 = spillAcc.get()
       val fp0 = fpSnapshot()
+      val compiles0 = compiles()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
         val dt = (System.nanoTime() - t0) / 1e9
         quiesce()
+        compileCounts(name) = compiles() - compiles0
         val fp = fpDelta(fp0)
         // distinct fingerprints across passes mark the query as
         // plan-VOLATILE (AQE near-threshold flips) — the gate skips
@@ -256,6 +291,9 @@ object Bench {
     val qsSpill = queries.map { case (name, _) =>
       "\"" + name + "\":" + spillBytes.getOrElse(name, -1L)
     }.mkString("{", ",", "}")
+    val qsCompiles = queries.map { case (name, _) =>
+      "\"" + name + "\":" + compileCounts.getOrElse(name, -1L)
+    }.mkString("{", ",", "}")
     val qsFp = queries.flatMap { case (name, _) =>
       planFp.get(name).map(fp => s"${jstr(name)}:${jstr(fp)}")
     }.mkString("{", ",", "}")
@@ -272,7 +310,7 @@ object Bench {
       else None
     }.mkString("{", ",", "}")
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","streaming_total":$streamingTotal%.3f,"n_runs":$runs,"queries":$qs,"queries_mean":$qsMean$qsPasses,"shuffle_bytes":$qsShuffle,"spill_bytes":$qsSpill,"plan_fp":$qsFp,"plan_fp_volatile":$fpVolatile,"plan_fp_states":$qsFpStates,"errors":$errJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","streaming_total":$streamingTotal%.3f,"calib_ms":$calib%.1f,"cpus":$cpus,"n_runs":$runs,"queries":$qs,"queries_mean":$qsMean$qsPasses,"shuffle_bytes":$qsShuffle,"spill_bytes":$qsSpill,"compiles":$qsCompiles,"plan_fp":$qsFp,"plan_fp_volatile":$fpVolatile,"plan_fp_states":$qsFpStates,"errors":$errJson,"sf":"$sfDir"}"""
     println(fullLine)
     // The per-query line grew past the driver's stdout tail window at 79
     // queries (round 3's BENCH parsed:null), so the LAST line is a compact
@@ -295,7 +333,7 @@ object Bench {
     // the error payload entirely (n_errors always carries the truth and
     // the full messages live in the detail line + bench_detail.json).
     def compactLine(errJson: String): String =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","streaming_total":$streamingTotal%.3f,"n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","streaming_total":$streamingTotal%.3f,"calib_ms":$calib%.1f,"cpus":$cpus,"n_queries":${results.size},"n_errors":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     val errCompact = errors.take(2)
       .map { case (k, v) => s"${jstr(k.take(24))}:${jstr(v.take(40))}" }
       .mkString("{", ",", "}")

@@ -8,6 +8,22 @@ import org.apache.spark.sql.SparkSession
   * time inside a loader, which would leak into concurrent queries.
   */
 object Sessions {
+  /** Entries in Spark's JVM-wide cache of Janino-compiled classes
+    * (whole-stage stages, projections, predicates, orderings), set as
+    * `spark.sql.codegen.cache.maxEntries` by [[configure]]. Spark's
+    * default is 100. One cold pass of the perfbench analytics slice
+    * (13 queries) compiles 154 distinct classes, so at 100 every warm
+    * pass evicted and recompiled ~125 of them at 5–35 ms each. 1000
+    * holds about six slice working sets. It is a bound, not "all": a
+    * full pass over the 366 queries compiles ~4,000 classes, and the
+    * serving edge mints a class per distinct literal window, so the
+    * bound caps the metaspace a long-running JVM keeps for classes it
+    * will not reuse (a cached class costs a few KB of metaspace).
+    * The conf is STATIC: Spark reads it once per JVM, when the cache is
+    * first touched, so it only takes effect through session
+    * construction — `spark.conf.set` refuses it at runtime. */
+  val CodegenCacheBound = 1000
+
   /** Engine configs every graft session needs. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
@@ -26,6 +42,8 @@ object Sessions {
     // exactly on this corpus (ASCII) and on any ASCII slug/key data; the
     // engine's normalize operators only target such keys.
     .config("spark.sql.icu.caseMappings.enabled", "false")
+    // a static conf: it must be set here, at construction
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheBound.toString)
     .config("spark.sql.warehouse.dir",
       s"${sys.props("java.io.tmpdir")}/graft-warehouse")
     .config("javax.jdo.option.ConnectionURL",

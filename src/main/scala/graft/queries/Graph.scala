@@ -484,13 +484,17 @@ object Graph {
     * is ever joined against the adjacency; the visited rows are never
     * re-grouped (the first BFS cut re-aggregated the full dist set
     * every round: 6 full passes, 10.5 s at sf0.1 for a 2-hop graph).
-    * The walk stops when the frontier is empty — one checkpointed
-    * `limit(1).count()` per round, the standard convergence probe — or
-    * after `maxRounds` expansions. State is (visited, frontier). */
+    * The walk stops when the frontier is empty — one `isEmpty` probe of
+    * the checkpointed frontier per round — or after `maxRounds`
+    * expansions. State is (visited, frontier). The probe plans a root
+    * `CollectLimit`, which stops at the first row and reuses its compiled
+    * class; a `limit(1).count()` probe plans a Local/GlobalLimit pair
+    * whose counter names are JVM-unique, so every round recompiled it,
+    * and it added a single-partition exchange. */
   private def frontierWalk(seed: DataFrame, maxRounds: Int)(
       expand: (DataFrame, DataFrame, Int) => DataFrame): Iterate.Fixpoint[(DataFrame, DataFrame)] = {
     val start = seed.localCheckpoint()
-    Iterate.fixpoint((start, start), maxRounds)(_._2.limit(1).count() == 0) {
+    Iterate.fixpoint((start, start), maxRounds)(_._2.isEmpty) {
       case ((visited, frontier), k) =>
         val next = expand(frontier, visited, k).localCheckpoint()
         (visited.unionAll(next).localCheckpoint(), next)
@@ -1099,7 +1103,7 @@ object Graph {
           .unionAll(edges.select(col("b").as("n")))
           .groupBy("n").agg(count(lit(1)).as("deg"))
           .filter(col("deg") < CoreK).select("n").localCheckpoint()
-        low.limit(1).count() == 0
+        low.isEmpty // a CollectLimit probe: see frontierWalk
     } { (edges, _) =>
       edges
         .join(low.toDF("a"), Seq("a"), "left_anti")

@@ -111,7 +111,11 @@ object MicroBatch {
     * function registrations do NOT (per-session registry), so the helper
     * re-registers them. Memory-sink tables land in the CLONE's temp
     * catalog — the body must read them off the clone and return the
-    * result.
+    * result. Known cost: Spark keys its codegen cache on the context
+    * class loader as well as the source, and each session (this clone,
+    * and the one `StreamExecution` clones from it per query) brings its
+    * own loader, so a drain's micro-batch classes miss the cache and
+    * compile again on every run (7–9 per `q_st_static_join` run).
     */
   def withStreamSession[T](s: SparkSession)(body: SparkSession => T): T = {
     val ss = s.newSession()

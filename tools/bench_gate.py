@@ -26,6 +26,14 @@ the axes get different trust levels:
                         tools/plan_fp.py bench_detail.json
     shuffle regression: new > 1.5 x old AND new - old > 65536 bytes
     spill  regression: spill went 0 -> nonzero (or > 1.5 x nonzero old)
+    codegen regression: the warm pass compiles > 1.5 x old AND at least
+                        4 more generated classes ("compiles", Bench's
+                        CodegenMetrics delta) — an evicted codegen cache
+                        or a plan that emits new source on every run.
+                        Only when both snapshots carry the field;
+                        plan-volatile queries are exempt, as for
+                        fingerprints (another plan compiles other
+                        classes).
   NOISE-QUARANTINED (host-jitter-prone, re-measure before failing):
     time regression:   new > 1.5 x old AND new - old > 0.4 s
                         AND the query's shuffle bytes did NOT regress
@@ -45,6 +53,10 @@ the axes get different trust levels:
     fingerprint verdict: plan-identical ⇒ suspect GC/JIT/host, plan
     changed ⇒ the plan is the cause.
 
+Time-only trips print the NEW/OLD ratio of the snapshots' host
+calibration ("calib_ms", a fixed CPU loop) when both carry it: a trip
+on a host that reads 1.4x slower on that loop is most likely the host.
+
 Absolute floors keep sub-noise queries from tripping the ratios. New
 queries (absent from OLD) and removed ones are reported, not failed.
 Exit 0 clean / 1 hard or confirmed regressions / 3 quarantine pending.
@@ -58,6 +70,7 @@ import sys
 TIME_RATIO, TIME_FLOOR_S = 1.5, 0.4
 SHUF_RATIO, SHUF_FLOOR_B = 1.5, 65536
 SPILL_RATIO = 1.5
+COMPILE_RATIO, COMPILE_FLOOR = 1.5, 4
 TOOLS_DIR = os.path.dirname(os.path.abspath(__file__))
 FLIPS_FILE = os.path.join(TOOLS_DIR, "bench_flips.json")
 FP_PINS_FILE = os.path.join(TOOLS_DIR, "plan_fingerprints.json")
@@ -95,6 +108,9 @@ def main() -> int:
     os_, ns = old.get("shuffle_bytes", {}), new.get("shuffle_bytes", {})
     op, np_ = old.get("spill_bytes", {}), new.get("spill_bytes", {})
     rt = retry["queries"] if retry else {}
+    oc, nc = old.get("compiles"), new.get("compiles")
+    c_old, c_new = old.get("calib_ms"), new.get("calib_ms")
+    host = f"; host calib {c_new / c_old:.2f}x" if c_old and c_new else ""
 
     # fingerprint reference: committed pins first (the acknowledged
     # state), OLD's own plan_fp as fallback for un-pinned queries
@@ -137,6 +153,11 @@ def main() -> int:
         p0, p1 = op.get(q, 0), np_.get(q, 0)
         if p1 > 0 and (p0 == 0 or p1 > SPILL_RATIO * p0):
             hard.append(f"SPILL {q}: {p0} B -> {p1} B")
+        if oc is not None and nc is not None and q not in volatile:
+            c0, c1 = oc.get(q, -1), nc.get(q, -1)
+            if c0 >= 0 and c1 > COMPILE_RATIO * c0 and c1 - c0 >= COMPILE_FLOOR:
+                hard.append(f"CGEN  {q}: {c0} -> {c1} classes compiled "
+                            "on the warm pass")
         verdict = fp_verdict(q)
         if verdict == "changed":
             # Emit the PLAN entry even when the same query also
@@ -172,7 +193,7 @@ def main() -> int:
                              None: "no fingerprint reference"}[verdict]
                     confirmed.append(
                         f"TIME  {q}: {t0:.2f} s -> {t1:.2f} s, "
-                        f"retry {t2:.2f} s (both trip; {cause})")
+                        f"retry {t2:.2f} s (both trip; {cause}{host})")
                 else:
                     print(f"noise {q}: {t0:.2f} s -> {t1:.2f} s, "
                           f"retry {t2:.2f} s — host jitter, cleared")
@@ -182,7 +203,7 @@ def main() -> int:
                        "changed": "fingerprint CHANGED",
                        None: "no fingerprint reference"}[verdict]
                 print(f"noise {q}: {t0:.2f} s -> {t1:.2f} s "
-                      f"({t1 / t0:.2f}x) with flat shuffle bytes "
+                      f"({t1 / t0:.2f}x{host}) with flat shuffle bytes "
                       f"({b0} -> {b1}), {fpn} — quarantined, re-measure")
     for q in sorted(set(ot) - set(nt)):
         print(f"note  {q}: removed (was {ot[q]:.2f} s)")

@@ -150,6 +150,20 @@ def main():
                        detail(base, spill={"q_a": 5000000, "q_b": 0}))
     check("spill hard trip", rc == 1 and "SPILL q_a" in out, out)
 
+    # warm-pass compile counts gate like shuffle bytes, only when both
+    # snapshots carry them; a time-only trip shows the host calibration
+    # ratio
+    grown = dict(detail(base), compiles={"q_a": 0, "q_b": 8})
+    rc, out = run_gate(dict(detail(base), compiles={"q_a": 0, "q_b": 0}), grown)
+    check("compile growth trips", rc == 1 and "CGEN  q_b: 0 -> 8" in out
+          and "q_a" not in out, out)
+    rc, out = run_gate(detail(base), grown)
+    check("compiles absent from old: no trip", rc == 0, out)
+    rc, out = run_gate(dict(detail(base), calib_ms=100.0),
+                       dict(detail({"q_a": 2.0, "q_b": 2.0}), calib_ms=140.0))
+    check("time trip shows host calib ratio",
+          rc == 3 and "host calib 1.40x" in out, out)
+
     # new + removed queries are notes, not failures
     rc, out = run_gate(detail(base), detail({"q_a": 1.0, "q_c": 9.0}))
     check("new/removed are notes",
