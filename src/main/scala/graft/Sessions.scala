@@ -44,6 +44,17 @@ object Sessions {
     .config("spark.sql.icu.caseMappings.enabled", "false")
     // a static conf: it must be set here, at construction
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheBound.toString)
+    // Spark keys that cache on the thread's context class loader as well
+    // as the source (`CodeGenerator.compile`). With artifact isolation on
+    // (Spark's default) every `newSession()` clone, and the clone each
+    // `StreamExecution` makes of it, gets its own artifact state and
+    // class loader, so a drain's classes (MicroBatch.withStreamSession)
+    // missed the cache on every run: a warm `q_st_static_join` compiled
+    // 9 classes, 0 with isolation off. The engine adds no session
+    // artifacts (no addArtifact or addJar), so one shared loader loses
+    // nothing. Spark reads the conf when a session is created, so it is
+    // set here and every clone inherits it.
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.warehouse.dir",
       s"${sys.props("java.io.tmpdir")}/graft-warehouse")
     .config("javax.jdo.option.ConnectionURL",

@@ -778,7 +778,7 @@ object Parity {
     val ev = Tables.events(s, d)
     val root = tmpRoot("stream", d)
     landOnce(ev, s"$root/src")
-    // FIXED checkpoint + sink (unlike the memory-sink drains): the sink
+    // FIXED checkpoint + sink (unlike the drainToMemory drains): the sink
     // is durable, so a repeat call is a second scheduler tick — the
     // checkpoint finds zero new files and the sink is already correct.
     // This is the real resume semantics, and it keeps repeat bench/
@@ -865,7 +865,7 @@ object Parity {
   // SURVEY §2.9: the stream-stream interval join (view → click within 6
   // hours per user), driver-verified. Both sides stream from the same
   // landed directory, filtered to their event type; the drain is one
-  // AvailableNow tick into a memory sink. The landing writes ≤32 files
+  // AvailableNow tick through drainToMemory. The landing writes ≤32 files
   // (well under the file source's 1000-files-per-trigger default), so
   // the backlog drains as ONE micro-batch: no input can be late against
   // the watermark and the emitted inner-join rows are exactly the batch
@@ -2160,7 +2160,7 @@ object Parity {
   def streamingLeaderboard(s: SparkSession, d: String): DataFrame = {
     val out = drainEvents(s, d, "stream_lead")(events => MicroBatch.leaderboard(events()).toDF())
     // "board now" = rows at each key's max revision; a window avoids
-    // the self-join against the memory sink's view
+    // joining the drain result back to an aggregate of itself
     val wl = org.apache.spark.sql.expressions.Window.partitionBy("event_type")
     out.withColumn("_maxrev", max("rev").over(wl))
       .filter(col("rev") === col("_maxrev"))

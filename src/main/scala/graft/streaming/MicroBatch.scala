@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -28,16 +30,20 @@ import graft.warehouse.Upsert
   *
   * Every drain the engine runs starts and stops here (only the
   * long-running [[Scheduler.gasIngestStream]] returns a live query):
-  *  - [[drainToMemory]] runs a stream plan into a memory sink on a
-  *    cloned session ([[withStreamSession]]) and returns the sink's
-  *    table. Two settings are derived from the plan, never passed: a
-  *    `transformWithState` node switches the clone to the RocksDB state
-  *    store, the only store that operator supports; and one in
-  *    processing-time mode (state TTL) runs on the default trigger,
-  *    bounded by [[drainAvailable]], because under AvailableNow it
-  *    schedules empty batches forever. The run-scoped checkpoint is
-  *    deleted once the query has terminated: a memory sink cannot
-  *    resume from a checkpoint, so nothing could ever read it again.
+  *  - [[drainToMemory]] runs a stream plan on a cloned session
+  *    ([[withStreamSession]]) and returns its output. Each micro-batch
+  *    is `localCheckpoint`ed where it ran, so the rows stay in the
+  *    executors' block managers; only block ids reach the driver (a
+  *    memory sink would collect every row into the driver's heap and
+  *    ship it back to the executors on the read). Two settings are
+  *    derived from the plan, never passed: a `transformWithState` node
+  *    switches the clone to the RocksDB state store, the only store
+  *    that operator supports; and one in processing-time mode (state
+  *    TTL) runs on the default trigger, bounded by [[drainAvailable]],
+  *    because under AvailableNow it schedules empty batches forever.
+  *    The run-scoped checkpoint is deleted once the query has
+  *    terminated: the result lives only in this run's blocks, so
+  *    nothing could ever resume from it.
   *  - the foreachBatch drains ([[drainOnce]], [[drainDyadicTree]],
   *    [[drainCdc]], [[drainWithLateQuarantine]]) keep their checkpoint —
   *    their sinks are durable and a repeat run is the next tick — and
@@ -109,13 +115,7 @@ object MicroBatch {
     * settings or a stale restore. Builder-set session options (UTC,
     * nanosAsLong) carry into the clone via initialSessionOptions; engine
     * function registrations do NOT (per-session registry), so the helper
-    * re-registers them. Memory-sink tables land in the CLONE's temp
-    * catalog — the body must read them off the clone and return the
-    * result. Known cost: Spark keys its codegen cache on the context
-    * class loader as well as the source, and each session (this clone,
-    * and the one `StreamExecution` clones from it per query) brings its
-    * own loader, so a drain's micro-batch classes miss the cache and
-    * compile again on every run (7–9 per `q_st_static_join` run).
+    * re-registers them.
     */
   def withStreamSession[T](s: SparkSession)(body: SparkSession => T): T = {
     val ss = s.newSession()
@@ -124,22 +124,30 @@ object MicroBatch {
     body(ss)
   }
 
-  /** Drain the stream `plan` builds on a cloned session into a memory
-    * sink, like one scheduler tick, and return the sink's table. A fresh
-    * run id names the sink and the checkpoint `root/cp_<run>`, so a
-    * repeat call recomputes instead of resuming (the data is
-    * deterministic, the run id is not). `plan` receives the clone and
-    * opens its own sources there — a stream-stream join reads each side
-    * from its own source. The state store and the trigger are derived
-    * from the plan (see the object doc); the checkpoint is deleted once
-    * the query has terminated. */
+  /** Drain the stream `plan` builds on a cloned session, like one
+    * scheduler tick, and return its output: the union of the
+    * micro-batches in batch-id order, or an empty frame with the
+    * stream's schema when no batch ran. Each batch is stored as
+    * `batch.localCheckpoint()` under its id, so a replayed id replaces
+    * its entry instead of adding rows twice. The rows stay in the
+    * executors' block managers until the caller unpersists them
+    * (`getPersistentRDDs`) or `ContextCleaner` frees them with the
+    * result. The checkpointed plans are handed back to the clone, so
+    * downstream operators plan under its conf, not under the stream's
+    * own clone (which runs with AQE off). A fresh run id names the
+    * checkpoint `root/cp_<run>`, so a repeat call recomputes instead of
+    * resuming (the data is deterministic, the run id is not). `plan`
+    * receives the clone and opens its own sources there — a
+    * stream-stream join reads each side from its own source. The state
+    * store and the trigger are derived from the plan (see the object
+    * doc); the checkpoint is deleted once the query has terminated. */
   def drainToMemory(s: SparkSession, root: String)
                    (plan: SparkSession => DataFrame): DataFrame =
     withStreamSession(s) { ss =>
+      import org.apache.spark.sql.{Encoders, Row, classic}
       import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
       import org.apache.spark.sql.streaming.TimeMode
       val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val name = s"graft_drain_$runId"
       val checkpoint = s"$root/cp_$runId"
       val stream = plan(ss)
       val timeModes = stream.queryExecution.logical.collect {
@@ -149,9 +157,16 @@ object MicroBatch {
         ss.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val processingTime = timeModes.contains(TimeMode.ProcessingTime())
-      val w = stream.writeStream.format("memory").queryName(name)
-        .outputMode("append")
+      val session = ss.asInstanceOf[classic.SparkSession]
+      val batches = new java.util.concurrent.ConcurrentSkipListMap[Long, DataFrame]()
+      val w = stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val cp = batch.localCheckpoint()
+          batches.put(id, new classic.Dataset[Row](session, cp.queryExecution.logical,
+            Encoders.row(cp.schema)))
+          ()
+        }
       val q = (if (processingTime) w else w.trigger(Trigger.AvailableNow())).start()
       try {
         if (processingTime) drainAvailable(q) else q.awaitTermination()
@@ -160,7 +175,8 @@ object MicroBatch {
         val p = new org.apache.hadoop.fs.Path(checkpoint)
         p.getFileSystem(ss.sparkContext.hadoopConfiguration).delete(p, true)
       }
-      ss.table(name)
+      batches.values.asScala.reduceOption(_ union _).getOrElse(
+        ss.createDataFrame(ss.sparkContext.emptyRDD[Row], stream.schema))
     }
 
   /** The one start/await body of the foreachBatch drains: AvailableNow

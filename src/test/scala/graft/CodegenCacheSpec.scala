@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions.{col, lit}
 
 /** A warm query compiles nothing: its generated classes stay in Spark's
   * JVM-wide codegen cache (bounded by [[Sessions.CodegenCacheBound]]),
-  * and its plan emits the same source on every run. Compiles are read
-  * from Spark's `CodegenMetrics` counter ([[Bench.compiles]]). */
+  * and its plan emits the same source on every run, on the base session
+  * and on a drain's session clones alike. Compiles are read from
+  * Spark's `CodegenMetrics` counter ([[Bench.compiles]]). */
 class CodegenCacheSpec extends SparkSpec {
 
   /** Classes compiled by one run of `q`. */
@@ -39,6 +40,16 @@ class CodegenCacheSpec extends SparkSpec {
 
   test("a warm re-run of the graph fixpoint loops compiles no class") {
     for (q <- Seq("q_gr_scc", "q_gr_kcore")) {
+      compilesOf(q)
+      assert(compilesOf(q) == 0, q)
+    }
+  }
+
+  test("a warm re-run of a drain compiles no class") {
+    // one class loader for every session: clones share the cache entries
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    // a stateless drain and a RocksDB transformWithState drain
+    for (q <- Seq("q_st_static_join", "q_st_anomaly_v2")) {
       compilesOf(q)
       assert(compilesOf(q) == 0, q)
     }

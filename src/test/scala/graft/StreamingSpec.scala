@@ -1425,6 +1425,39 @@ class StreamingSpec extends SparkSpec {
     assert(left.isEmpty, s"drain checkpoints left under $root: ${left.mkString(", ")}")
   }
 
+  test("a drain's result reads checkpointed batches, never a driver-side sink") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val out = SparkEntry.queries("q_st_static_join")(spark, sf)
+    val leaves = out.queryExecution.analyzed.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
+      s"leaves: ${leaves.map(_.nodeName).mkString(", ")}")
+    assert(out.count() > 0)
+  }
+
+  test("a drain over an empty landing returns no rows with the stream's schema") {
+    val events = Tables.events(spark, sf)
+    val src = dir("empty-src")
+    def stream(s: org.apache.spark.sql.SparkSession) =
+      MicroBatch.readEvents(s, src, events).select("event_id", "user_id", "ts")
+    val out = MicroBatch.drainToMemory(spark, dir("empty-root"))(stream)
+    assert(out.schema === stream(spark).schema)
+    assert(out.count() === 0L)
+  }
+
+  test("a multi-batch drain returns each batch's rows exactly once") {
+    val events = Tables.events(spark, sf)
+    val src = dir("multi-src")
+    val files = 3
+    events.repartition(files).write.mode("overwrite").parquet(src)
+    val out = MicroBatch.drainToMemory(spark, dir("multi-root")) { ss =>
+      MicroBatch.readEvents(ss, src, events, Some(1)).select("event_id")
+    }
+    // one checkpointed scan per micro-batch, one micro-batch per file
+    assert(out.queryExecution.analyzed.collectLeaves().size === files)
+    assert(out.orderBy("event_id").collect().toSeq ===
+      events.select("event_id").orderBy("event_id").collect().toSeq)
+  }
+
   test("drains derive their state store and trigger from the plan") {
     // transformWithState needs RocksDB; the v2 anomaly drain must equal
     // its flatMapGroupsWithState batch twin
